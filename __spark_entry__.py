@@ -1489,9 +1489,9 @@ def q_irr_by(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_irr_bisect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IRR via DISTRIBUTED fixed-step bisection, oracled (round-7 VERDICT
     #4 — the kcenter/mmr/rake unroll applied to the root-finder): 40
-    halvings of the dyadic bracket [0, 4], each step ONE rounded
-    NPV-sign aggregate over user 0's indexed flow relation
-    (agg.irr_bisect — the flows never collect to the driver). The DuckDB
+    halvings of the dyadic bracket [0, 4], each step a rounded NPV sign
+    test folded in-plan over user 0's sorted flow array (agg.irr_bisect
+    — one aggregate job, the flows never collect to the driver). The DuckDB
     twin unrolls the same 40 steps as a CTE chain with one correlated
     NPV subquery per step; matching sign decisions make the final
     bracket — hence the rate — BIT-EQUAL dyadic doubles. The adaptive
@@ -1511,9 +1511,9 @@ def q_irr_by_bisect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GROUPED IRR via distributed fixed-step bisection (agg.irr_by_bisect
     — round-8 VERDICT #3, the irr_bisect unroll generalized): per-user
     rates for users 0-11 of `events`, 40 halvings of the dyadic bracket
-    [0, 4], EVERY group advancing in ONE groupBy(user_id) aggregate per
-    step (map-side-partial shuffles carrying only group cardinality; no
-    applyInPandas, flows never leave the JVM). The DuckDB twin unrolls
+    [0, 4], every group folding the whole walk in-plan over its sorted
+    flow array (one lazy aggregate plan; no applyInPandas, flows never
+    leave the JVM). The DuckDB twin unrolls
     the same 40 steps as a CTE chain with a GROUP BY per step; bracket
     decisions on the 4-dp-ROUNDED f(mid) over exact dyadic midpoints
     make the rates bit-equal, 6-dp rounded for the hash."""
@@ -4406,8 +4406,7 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "source_cap": q_source_cap,
     # --- re-check: operators whose PLAN changed in round 10 (uplift/
     # psm_match range-partition scale-shape; mann_kendall pair budget +
-    # tie contract; rmst/km_ci guard memoization; irr_by_bisect adaptive
-    # step batching) ---
+    # tie contract; rmst/km_ci guard memoization; irr_by_bisect) ---
     "uplift": q_uplift,
     "psm_match": q_psm_match,
     "mann_kendall": q_mann_kendall,

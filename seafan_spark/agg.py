@@ -272,25 +272,6 @@ def irr_by(
     return d.groupBy(*keys).applyInPandas(solve, schema=out_schema)
 
 
-def _auto_batch(small: bool, total_rows: int) -> int:
-    """Dyadic step-batch width for the bisection IRRs: cap the exploded
-    candidate join at ~2M priced rows per pass. A flat batch=10 prices
-    (2^10 − 1) × rows each pass — near the 100k-row small-relation
-    threshold that is ~100M pow() rows on ONE coalesced task, ~25x the
-    sequential total compute (round-9 ADVICE). Scaling the window to
-    the relation keeps tiny series at the 4-pass optimum (800 rows →
-    batch 10) and hands 100k rows batch 4 (~1.5M rows/pass); big
-    relations keep batch 3 (each pass re-scans the cache 2^batch-fold,
-    so the step/scan trade flips regardless)."""
-    import math
-
-    if not small:
-        return 3
-    budget = 2_000_000
-    n = max(1, int(total_rows))
-    return max(1, min(10, int(math.log2(budget / n + 1.0))))
-
-
 def _bisect_fused_cols(
     fl: Column,
     cost_col: Column,
@@ -302,29 +283,21 @@ def _bisect_fused_cols(
 ) -> tuple[Column, Column, Column]:
     """The ENTIRE fixed-step bisection as one Column expression over a
     per-group flow array ``fl`` = array<struct<i: double, v: double>>
-    sorted ascending by ``i`` (the :func:`irr_bisect` sequential
-    recurrence, verbatim, inside a higher-order fold) — zero driver
-    round-trips, so the per-pass orchestration cost (plan + codegen +
-    collect + createDataFrame, the dominant cost of the batched-pass
-    walk on SMALL relations) disappears entirely.
+    sorted ascending by ``i`` (the sequential recurrence, verbatim,
+    inside a higher-order fold) — zero driver round-trips per step.
 
-    Bit-identity with the batched driver walk: every NPV fold adds
-    terms in ascending ``i`` — the same IEEE addition sequence the
-    coalesce(1) aggregate accumulates (per group, rows arrive in window
-    order); null flows contribute 0.0 exactly as ``F.sum`` skips them;
-    f(mid) is rounded with the in-plan ``rounding.round_col`` (the same
-    binary-value rule ``_round_bin`` twins driver-side); midpoints are
-    the exact dyadic doubles ``(lo+hi)/2``, which the fixed-grid pass
-    hits identically (pinned by test_round10's batch-independence).
-    mid and the rounded f(mid) are let-bound once per step via the
-    transform-singleton trick (HOF bodies get no codegen CSE), so each
-    step costs exactly one NPV fold.
+    Every NPV fold adds terms in ascending ``i``, so the summation order
+    is pinned by the array, not by partitioning; null flows contribute
+    0.0 exactly as ``F.sum`` skips them; f(mid) is rounded with the
+    in-plan ``rounding.round_col``; midpoints are the exact dyadic
+    doubles ``(lo+hi)/2``. mid and the rounded f(mid) are let-bound once
+    per step via the transform-singleton trick (HOF bodies get no codegen
+    CSE), so each step costs exactly one NPV fold.
 
     ``gated=True`` (grouped contract): groups whose bracket shows no
     sign change — including NaN endpoints — freeze and yield NULL.
     ``gated=False`` (scalar contract): always step; the caller raises
-    on a strictly positive product, and NaN endpoints step anyway,
-    recovering a real bracket exactly like the driver loop.
+    on a strictly positive product, and NaN endpoints step anyway.
 
     Returns (rate, f(lo), f(hi)) columns.
     """
@@ -396,6 +369,64 @@ def _bisect_fused_cols(
     return rate, flo0, fhi0
 
 
+def _irr_bisect_core(
+    df: DataFrame,
+    keys: list[str],
+    flow_col: str,
+    order: Sequence[str],
+    cost: float | None,
+    lo: float,
+    hi: float,
+    steps: int,
+    npv_round: int,
+    gated: bool,
+) -> DataFrame:
+    """The one fixed-step bisection IRR plan shared by :func:`irr_bisect`
+    (``keys=[]``: the whole table is one group) and
+    :func:`irr_by_bisect`. Lazy — no job runs until the caller's action.
+
+    Flows are indexed ``i = row_number - 1`` over ``order`` within each
+    ``keys`` group, gathered per group into one ``array_sort``-ed
+    (i, v) array, and the whole walk runs in-plan
+    (:func:`_bisect_fused_cols`). The default cost (half the flow total,
+    null flows skipped like ``F.sum``) folds over that same sorted
+    array, so its summation order is ascending ``i`` on any
+    partitioning. Returns (keys..., rate, _flo, _fhi).
+    """
+    from pyspark.sql import Window
+
+    w = Window.partitionBy(*keys).orderBy(*[F.col(c).asc() for c in order])
+    g = (
+        df.select(
+            *keys,
+            F.struct(
+                (F.row_number().over(w) - 1).cast("double").alias("i"),
+                F.col(flow_col).cast("double").alias("v"),
+            ).alias("_x"),
+        )
+        .groupBy(*keys)
+        .agg(F.array_sort(F.collect_list("_x")).alias("_fl"))
+    )
+    if cost is None:
+        c = F.aggregate(
+            F.col("_fl"),
+            F.lit(None).cast("double"),
+            lambda s, x: F.when(x["v"].isNull(), s).otherwise(
+                F.coalesce(s, F.lit(0.0)) + x["v"]
+            ),
+        ) / F.lit(2.0)
+    else:
+        c = F.lit(float(cost))
+    g = g.select(*keys, "_fl", c.alias("_c"))
+    rate, flo, fhi = _bisect_fused_cols(
+        F.col("_fl"), F.col("_c"), float(lo), float(hi), steps, npv_round,
+        gated,
+    )
+    return g.select(
+        *keys, rate.alias("rate"), flo.alias("_flo"), fhi.alias("_fhi")
+    )
+
+
 def irr_bisect(
     df: DataFrame,
     flow_col: str,
@@ -405,181 +436,45 @@ def irr_bisect(
     hi: float = 4.0,
     steps: int = 40,
     npv_round: int = 4,
-    batch: int | None = None,
 ) -> float:
     """DISTRIBUTED fixed-step bisection IRR: the rate r in [lo, hi] with
     ``npv(r, flows) = cost`` after exactly ``steps`` halvings.
 
     This is the deterministic, exactly-replayable half of the IRR family
     (the kcenter/mmr/rake unroll applied to a root-finder): the flow
-    vector NEVER collects to the driver (driver state is the 3-float
-    bracket), unlike the reference-compat expression ``irr()`` which
-    gathers the flows (parser.go:617-658). Decisions test the ROUNDED
-    f(mid) (``npv_round`` decimals, the argmax_round story applied to a
-    sign test) so cross-engine/cross-run sum-order noise can never flip
-    a step; with a dyadic bracket every midpoint is an exact dyadic
+    vector NEVER collects to the driver — the whole walk is one
+    aggregate job (:func:`_irr_bisect_core` with no keys) and the
+    driver collects one (rate, f(lo), f(hi)) row — unlike the
+    reference-compat expression ``irr()`` which gathers the flows
+    (parser.go:617-658). Decisions test the ROUNDED f(mid)
+    (``npv_round`` decimals, the argmax_round story applied to a sign
+    test) so cross-engine/cross-run sum-order noise can never flip a
+    step; with a dyadic bracket every midpoint is an exact dyadic
     rational, so matching decisions give a BIT-EQUAL rate. ``cost``
     defaults to half the undiscounted flow total (brackets a root
     whenever the first flow is below half the total: f(0) = total −
-    cost > 0, f(r→∞) → flow₀ − cost < 0).
+    cost > 0, f(r→∞) → flow₀ − cost < 0). Raises ValueError when the
+    bracket shows no sign change.
 
-    Fixed-step bisection is binary search over a FIXED dyadic grid, so
-    ``batch`` consecutive halvings collapse into ONE relational pass
-    that prices all 2^batch − 1 interior grid points of the current
-    bracket — candidates ride as a broadcast (j, r) ROW relation
-    cross-joined onto the flows (one fixed aggregate; the
-    ``irr_by_bisect`` lesson: wide-aggregate-column plans pay ~3x
-    per-expression overhead) — then a driver-side walk of the k-level
-    decision tree replays the sequential recurrence exactly (the grid
-    points ARE the midpoints it would visit, and the collected sums are
-    rounded with the same binary rule as ``rounding.round_col``). 40
-    steps at the default batch=10 (small relations) = 4 passes + 1 init
-    job, vs 42. ``batch=None`` adapts via :func:`_auto_batch`: the
-    dyadic window is sized so each pass prices <= ~2M candidate rows
-    (10 for tiny series, shrinking toward 4 near the 100k coalesce
-    threshold); big relations use 3 — they re-scan the cache
-    2^batch-fold per pass.
+    A single cashflow series is small by contract: the series is
+    indexed and gathered in one partition.
 
     Adaptive-tolerance root polishing stays in ``irr()``/``irr_by`` —
     fixed-step bisection trades their early exit for replayability.
     """
-    import math
-
-    from pyspark.sql import types as _T
-
-    from seafan_spark.rank import global_row_number
-
     if steps < 1:
         raise ValueError("irr_bisect: steps must be >= 1")
-    if batch is not None and batch < 1:
-        raise ValueError("irr_bisect: batch must be >= 1")
-    lo, hi = float(lo), float(hi)
-    d, _total = global_row_number(
-        df.select(F.col(flow_col).cast("double").alias("_v"), *order),
-        [(c, True) for c in order],
-        "_rn",
-    )
-    d = d.select("_v", (F.col("_rn") - 1).cast("double").alias("_i"))
-    # a single cashflow series is small by contract; collapsing it to one
-    # partition turns each aggregate pass into one task instead of 32
-    # mostly-empty ones (measured 30s -> ~3s at sf0.1 pre-batching). Big
-    # relations keep their partitioning — the per-pass aggregate is
-    # map-side partial either way.
-    small = _total <= 100_000
-    if small:
-        d = d.coalesce(1)
-    if small and batch is None:
-        # Fully fused path (the default for small relations): the whole
-        # 40-step walk is ONE aggregate job — collect_list gathers the
-        # single coalesced partition in ascending-_i order (array_sort
-        # pins it), cost accumulates in that same order as before, and
-        # _bisect_fused_cols replays the sequential recurrence in-plan.
-        # Explicit batch= keeps the batched-pass walk below (its
-        # bit-equality with this path is pinned by test_round10_ops).
-        g = d.agg(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(F.col("_i").alias("i"), F.col("_v").alias("v"))
-                )
-            ).alias("_fl"),
-            (
-                (F.sum("_v") / 2.0) if cost is None else F.lit(float(cost))
-            ).alias("_c"),
+    row = _irr_bisect_core(
+        df, [], flow_col, order, cost, lo, hi, steps, npv_round, gated=False
+    ).collect()[0]
+    flo, fhi = row["_flo"], row["_fhi"]
+    if flo * fhi > 0:
+        raise ValueError(
+            f"irr_bisect: no sign change in [{lo}, {hi}] "
+            f"(f(lo)={flo}, f(hi)={fhi})"
         )
-        rate_c, flo_c, fhi_c = _bisect_fused_cols(
-            F.col("_fl"), F.col("_c"), lo, hi, steps, npv_round, gated=False
-        )
-        row = g.select(
-            flo_c.alias("_flo"), fhi_c.alias("_fhi"), rate_c.alias("_rate")
-        ).collect()[0]
-        flo, fhi = row["_flo"], row["_fhi"]
-        if flo * fhi > 0:
-            raise ValueError(
-                f"irr_bisect: no sign change in [{lo}, {hi}] "
-                f"(f(lo)={flo}, f(hi)={fhi})"
-            )
-        return float(row["_rate"])
-    d = d.cache()
-    if batch is None:
-        batch = _auto_batch(small, _total)
+    return float(row["rate"])
 
-    scale = float(10**npv_round)
-
-    def _round_bin(x: float) -> float:
-        # driver-side twin of rounding.round_col's binary-value rule
-        if x is None or math.isnan(x) or math.isinf(x):
-            return x
-        scaled = abs(x) * scale
-        if scaled >= float(2**52):
-            return x
-        return math.copysign(math.floor(scaled + 0.5) / scale, x)
-
-    cand_schema = _T.StructType(
-        [_T.StructField("_j", _T.IntegerType()),
-         _T.StructField("_r", _T.DoubleType())]
-    )
-    try:
-        spark = d.sparkSession
-
-        def price(pairs):
-            """ONE pass: raw npv sum at each (j, r) candidate."""
-            cand = spark.createDataFrame(pairs, cand_schema)
-            got = (
-                d.crossJoin(F.broadcast(cand))
-                .groupBy("_j")
-                .agg(
-                    F.sum(
-                        F.col("_v")
-                        / F.pow(F.lit(1.0) + F.col("_r"), F.col("_i"))
-                    ).alias("_s")
-                )
-                .collect()
-            )
-            return {r["_j"]: r["_s"] for r in got}
-
-        # ONE init job: cost (sum/2, the same Spark-side division as
-        # before) + raw sums at both bracket ends
-        agg_cols = [
-            F.sum(
-                F.col("_v") / F.pow(F.lit(1.0 + lo), F.col("_i"))
-            ).alias("_slo"),
-            F.sum(
-                F.col("_v") / F.pow(F.lit(1.0 + hi), F.col("_i"))
-            ).alias("_shi"),
-        ]
-        if cost is None:
-            agg_cols.append((F.sum("_v") / 2.0).alias("_c"))
-        row = d.agg(*agg_cols).collect()[0]
-        if cost is None:
-            cost = float(row["_c"])
-        flo = _round_bin(row["_slo"] - cost)
-        fhi = _round_bin(row["_shi"] - cost)
-        if flo * fhi > 0:
-            raise ValueError(
-                f"irr_bisect: no sign change in [{lo}, {hi}] "
-                f"(f(lo)={flo}, f(hi)={fhi})"
-            )
-        done = 0
-        while done < steps:
-            k_now = min(batch, steps - done)
-            npts = (1 << k_now) - 1
-            span = (hi - lo) / float(1 << k_now)
-            fs = price(
-                [(j, lo + float(j) * span) for j in range(1, npts + 1)]
-            )
-            lo_i, hi_i = 0, 1 << k_now
-            for _ in range(k_now):
-                mid_i = (lo_i + hi_i) // 2
-                fm = _round_bin(fs[mid_i] - cost) if mid_i > 0 else flo
-                if flo * fm <= 0:
-                    hi_i = mid_i
-                else:
-                    lo_i, flo = mid_i, fm
-            lo, hi = lo + float(lo_i) * span, lo + float(hi_i) * span
-            done += k_now
-        return (lo + hi) / 2.0
-    finally:
-        d.unpersist()
 
 def irr_by_bisect(
     df: DataFrame,
@@ -591,238 +486,39 @@ def irr_by_bisect(
     hi: float = 4.0,
     steps: int = 40,
     npv_round: int = 4,
-    batch: int | None = None,
 ) -> DataFrame:
     """GROUPED distributed fixed-step bisection IRR — :func:`irr_bisect`
-    generalized so EVERY group advances together (round-8 VERDICT #3):
-    per group g, the rate r in [lo, hi] with ``npv(r, flows_g) =
-    cost_g`` after exactly ``steps`` halvings.
+    per group: for each group g, the rate r in [lo, hi] with
+    ``npv(r, flows_g) = cost_g`` after exactly ``steps`` halvings.
 
-    Two batching axes keep the job count independent of both group count
-    and (mostly) step count:
-
-    - ACROSS GROUPS: one aggregate prices every group's candidates
-      simultaneously (map-side partial — the shuffle carries only
-      group x candidate partials). Never an ``applyInPandas`` (contrast
-      :func:`irr_by`, which Arrow-ships each group's whole flow vector
-      to Python); flows never leave the JVM.
-    - ACROSS STEPS: fixed-step bisection is binary search over a FIXED
-      dyadic grid, so ``batch`` consecutive halvings collapse into ONE
-      pass that prices all 2^batch − 1 interior grid points of each
-      group's bracket and walks the k-level decision tree driver-side —
-      the signs at those exact midpoints are everything the sequential
-      recurrence would look at. Candidates ride as ROWS (a broadcast
-      (group, j, r, cost) relation joined onto the flows; ONE fixed
-      aggregate expression), not as 2^k aggregate columns — measured
-      ~3x cheaper per pass at the same k: wide-aggregate plans pay
-      per-expression analysis/codegen overhead that candidate rows do
-      not, and map-side partial aggregation collapses the exploded join
-      to group x candidate partials either way. 40 steps at the default
-      batch=10 (small relations) = 4 passes + 2 init jobs, vs 40.
-
-    ``batch=None`` adapts via :func:`_auto_batch`: the dyadic window is
-    sized so each coalesced pass prices <= ~2M exploded candidate rows
-    (batch 10 for tiny series, 4 near the 100k threshold — a flat 10
-    there would put ~100M pow() rows on one task, ~25x the sequential
-    compute); corpus-sized flow relations use 3 — each pass re-scans
-    the cache 2^batch-fold, so the step/scan trade flips.
+    One lazy plan (:func:`_irr_bisect_core`): a window shuffle on
+    ``keys`` indexes each group's flows, the same exchange gathers them
+    into one sorted array per group, and every group runs the whole walk
+    in-plan. No driver round-trips, no eager job at build time, never an
+    ``applyInPandas`` (contrast :func:`irr_by`, which Arrow-ships each
+    group's flows to Python); flows never leave the JVM. Each group's
+    flows must fit in one array (cohorts, not a corpus-sized series).
 
     Determinism contract shared with ``irr_bisect``: decisions test the
-    ROUNDED f(mid) (``npv_round`` decimals, the same binary-value
-    rounding rule as ``rounding.round_col``, applied driver-side to the
-    exactly-transferred sums) at exact dyadic midpoints, so matching
+    ROUNDED f(mid) at exact dyadic midpoints, so each group's rate is
+    bit-equal to ``irr_bisect`` on that group alone, and matching
     decisions give bit-equal rates cross-engine — the DuckDB twin stays
-    the straightforward sequential 40-step CTE chain, and the
-    grouped-equals-scalar pytest pins the batched walk to the
-    sequential recurrence bit-for-bit. ``cost`` defaults to half each
-    group's undiscounted flow total. Groups whose bracket has no sign
-    change return rate NULL (one degenerate group must not abort the
-    job — the ``irr_by`` contract). Driver state is 4 floats per group,
-    bounded by group cardinality — cohorts, not corpus.
+    the straightforward sequential 40-step CTE chain. ``cost`` defaults
+    to half each group's undiscounted flow total. Groups whose bracket
+    has no sign change return rate NULL (one degenerate group must not
+    abort the job — the ``irr_by`` contract).
 
     Returns (keys..., rate double), one row per group.
     """
-    import math
-
-    from pyspark.sql import Window
-    from pyspark.sql import types as _T
-
     if steps < 1:
         raise ValueError("irr_by_bisect: steps must be >= 1")
-    if batch is not None and batch < 1:
-        raise ValueError("irr_by_bisect: batch must be >= 1")
     keys = list(keys)
     if not keys:
         raise ValueError("irr_by_bisect: need at least one key (use irr_bisect)")
-    lo, hi = float(lo), float(hi)
-    w = Window.partitionBy(*keys).orderBy(*[F.col(c).asc() for c in order])
-    flows = (
-        df.select(*keys, F.col(flow_col).cast("double").alias("_v"), *order)
-        .withColumn("_i", (F.row_number().over(w) - 1).cast("double"))
-        .select(*keys, "_v", "_i")
-    )
-    # small total flow relations collapse to one partition so every
-    # aggregate pass is one task, not 32 mostly-empty ones (the
-    # irr_bisect measurement); big relations keep their partitioning —
-    # the per-pass groupBy is map-side partial either way. cache() first
-    # so the count materializes the cache.
-    cached = flows.cache()
-    _total = cached.count()
-    small = _total <= 100_000
-    if small and batch is None:
-        # Fully fused path (the default for small relations): per-group
-        # sorted flow arrays + the one-expression sequential walk
-        # (_bisect_fused_cols) — 2 jobs total (the count above + the
-        # consumer's action) instead of init + ceil(steps/batch) passes.
-        # coalesce(1) keeps the per-group cost sum accumulating in the
-        # exact ascending-_i order the batched path's init job used.
-        # Explicit batch= keeps the batched-pass walk below; the
-        # grouped-equals-scalar and batch-independence pytests pin all
-        # paths to the same bits.
-        try:
-            g = cached.coalesce(1).groupBy(*keys).agg(
-                F.array_sort(
-                    F.collect_list(
-                        F.struct(
-                            F.col("_i").alias("i"), F.col("_v").alias("v")
-                        )
-                    )
-                ).alias("_fl"),
-                (
-                    (F.sum("_v") / 2.0)
-                    if cost is None
-                    else F.lit(float(cost))
-                ).alias("_c"),
-            )
-            rate_c, _flo_c, _fhi_c = _bisect_fused_cols(
-                F.col("_fl"), F.col("_c"), lo, hi, steps, npv_round,
-                gated=True,
-            )
-            return g.select(*keys, rate_c.alias("rate"))
-        finally:
-            cached.unpersist()
-    flows = cached.coalesce(1) if small else cached
-    if batch is None:
-        batch = _auto_batch(small, _total)
+    return _irr_bisect_core(
+        df, keys, flow_col, order, cost, lo, hi, steps, npv_round, gated=True
+    ).select(*keys, "rate")
 
-    scale = float(10**npv_round)
-
-    def _round_bin(x: float) -> float:
-        # driver-side twin of rounding.round_col's binary-value rule:
-        # sign(x) * floor(|x| * 10^d + 0.5) / 10^d, NaN/Inf/saturation
-        # pass-through — the collected double is bit-identical to what
-        # the in-plan round_col would have seen, so the decision is too
-        if x is None or math.isnan(x) or math.isinf(x):
-            return x
-        scaled = abs(x) * scale
-        if scaled >= float(2**52):
-            return x
-        return math.copysign(math.floor(scaled + 0.5) / scale, x)
-
-    try:
-        spark = flows.sparkSession
-        key_fields = [flows.schema[k] for k in keys]
-        cand_schema = _T.StructType(
-            list(key_fields)
-            + [_T.StructField("_j", _T.IntegerType()),
-               _T.StructField("_r", _T.DoubleType()),
-               _T.StructField("_c", _T.DoubleType())]
-        )
-
-        def price(cand_rows):
-            """ONE pass: f(r) = npv(r) − cost for every (group, j, r)
-            candidate row. Returns {(group, j): rounded f}."""
-            cand = spark.createDataFrame(cand_rows, cand_schema)
-            got = (
-                flows.join(F.broadcast(cand), on=keys)
-                .groupBy(*keys, "_j")
-                .agg(
-                    (
-                        F.sum(
-                            F.col("_v")
-                            / F.pow(F.lit(1.0) + F.col("_r"), F.col("_i"))
-                        )
-                        - F.first("_c")
-                    ).alias("_f")
-                )
-                .collect()
-            )
-            return {
-                (tuple(r[k] for k in keys), r["_j"]): _round_bin(r["_f"])
-                for r in got
-            }
-
-        # ONE init job: per-group cost + raw NPV sums at both bracket
-        # ends (no candidate join needed — lo/hi are constants here);
-        # f(lo)/f(hi) = round(sum − cost) driver-side, same ops as the
-        # in-plan form
-        c_expr = (F.sum("_v") / 2.0) if cost is None else F.lit(float(cost))
-        init = flows.groupBy(*keys).agg(
-            c_expr.alias("_c0"),
-            F.sum(
-                F.col("_v") / F.pow(F.lit(1.0 + lo), F.col("_i"))
-            ).alias("_slo"),
-            F.sum(
-                F.col("_v") / F.pow(F.lit(1.0 + hi), F.col("_i"))
-            ).alias("_shi"),
-        ).collect()
-        costs = {}
-        state = {}
-        for r in init:
-            g = tuple(r[k] for k in keys)
-            c = float(r["_c0"])
-            costs[g] = c
-            flo = _round_bin(r["_slo"] - c)
-            fhi = _round_bin(r["_shi"] - c)
-            # driver state: group -> [lo, hi, flo, ok]
-            state[g] = [lo, hi, flo, flo * fhi <= 0]
-        done = 0
-        while done < steps:
-            k_now = min(batch, steps - done)
-            npts = (1 << k_now) - 1
-            active = [g for g, s in state.items() if s[3]]
-            if not active:
-                break
-            # candidate j (1-based) = lo + j * (hi - lo) / 2^k: exact
-            # dyadic doubles identical to the sequential midpoints (both
-            # Python and the JVM do the same IEEE ops on exact inputs)
-            cand_rows = []
-            for g in active:
-                glo, ghi = state[g][0], state[g][1]
-                span = (ghi - glo) / float(1 << k_now)
-                cand_rows += [
-                    (*g, j, glo + float(j) * span, costs[g])
-                    for j in range(1, npts + 1)
-                ]
-            fs = price(cand_rows)
-            for g in active:
-                glo, ghi, flo, _ok = state[g]
-                span = (ghi - glo) / float(1 << k_now)
-                lo_i, hi_i = 0, 1 << k_now
-                for _ in range(k_now):
-                    mid_i = (lo_i + hi_i) // 2
-                    fm = fs[(g, mid_i)] if mid_i > 0 else flo
-                    if flo * fm <= 0:
-                        hi_i = mid_i
-                    else:
-                        lo_i, flo = mid_i, fm
-                state[g] = [
-                    glo + float(lo_i) * span,
-                    glo + float(hi_i) * span,
-                    flo,
-                    True,
-                ]
-            done += k_now
-        out_rows = [
-            (*g, ((s[0] + s[1]) / 2.0) if s[3] else None)
-            for g, s in sorted(state.items(), key=lambda kv: kv[0])
-        ]
-        out_schema = _T.StructType(
-            list(key_fields) + [_T.StructField("rate", _T.DoubleType())]
-        )
-        return spark.createDataFrame(out_rows, out_schema)
-    finally:
-        cached.unpersist()
 
 def rollup_table(
     pipe: Pipeline,

@@ -273,25 +273,20 @@ def _bucket_pairs(banded: DataFrame, keys: list[str], payload: list[str]) -> Dat
 
     Rows are collected per bucket into a sorted struct array (sorted by
     the leading payload column — the id — so emitted pairs satisfy
-    a < b exactly like the join's ``id_a < id_b`` filter), then exploded
-    into the i<j pairs. A bucket's array is O(bucket size) — the same
-    concentration the self-join's per-key cross product materializes,
-    minus the join machinery. Returns struct columns ``_a``/``_b``
-    carrying ``payload``."""
+    a < b exactly like the join's ``id_a < id_b`` filter), then the i<j
+    pairs come out of two explode levels: ``posexplode`` the array into
+    (i, a), then explode ``a`` against the slice after position i. No
+    single value grows past O(bucket size) — a hot bucket of m rows
+    streams its m(m-1)/2 pairs instead of building them as one array.
+    Returns struct columns ``_a``/``_b`` carrying ``payload``."""
     arr = F.array_sort(F.collect_list(F.struct(*payload)))
     g = banded.groupBy(*keys).agg(arr.alias("_xs")).filter(F.size("_xs") >= 2)
-    pairs = F.explode(
-        F.flatten(
-            F.transform(
-                F.col("_xs"),
-                lambda x, i: F.transform(
-                    F.slice(F.col("_xs"), i + F.lit(2), F.size(F.col("_xs"))),
-                    lambda y: F.struct(x.alias("_a"), y.alias("_b")),
-                ),
-            )
-        )
+    return g.select("_xs", F.posexplode("_xs").alias("_i", "_a")).select(
+        "_a",
+        F.explode(
+            F.slice(F.col("_xs"), F.col("_i") + F.lit(2), F.size("_xs"))
+        ).alias("_b"),
     )
-    return g.select(pairs.alias("_p")).select("_p._a", "_p._b")
 
 
 def minhash_pairs(
@@ -347,8 +342,11 @@ def minhash_pairs(
     # lazy persist shares the one computed copy across the three
     # consumers inside the same action (executor storage, auto-released
     # via ContextCleaner).
+    # a NULL id is no document identity: grouping would merge every
+    # null-id row into one signature and emit pairs with a NULL side
+    docs = pipe.df.filter(F.col(id_col).isNotNull())
     sig = minhash_signatures(
-        pipe.df, id_col, text_col, num_hashes, shingle_k, portable
+        docs, id_col, text_col, num_hashes, shingle_k, portable
     )
     if verify == "est":
         sig = sig.persist()
@@ -776,7 +774,9 @@ def simhash_pairs(
     # banded rows crossed two exchanges. With a single consumer the
     # round-10 lazy signature persist is no longer needed either — the
     # explode+hash+aggregate pipeline runs exactly once by construction.
-    sig = simhash_signatures(pipe.df, id_col, text_col, bits, shingle_k, portable)
+    # NULL ids are dropped before grouping, as in minhash_pairs
+    docs = pipe.df.filter(F.col(id_col).isNotNull())
+    sig = simhash_signatures(docs, id_col, text_col, bits, shingle_k, portable)
     banded = sig.select(
         "_id",
         "_sig",

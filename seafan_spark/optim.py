@@ -1,29 +1,14 @@
-"""Custom distributed trainer: the reference's SoftRMS cost (nn.go:555-573).
+"""Custom distributed trainer: the reference's NN fit (nn.go:598-840)
+under its three costs, including SoftRMS (nn.go:555-573), which no MLlib
+estimator optimizes.
 
 SoftRMS is per-class RMS between the softmax output and the one-hot target,
 summed over classes 1..C-1 (class 0 is the omitted base):
 
     L = sum_{i>=1} sqrt( (1/N) * sum_j (p_ji - y_ji)^2 )
 
-No MLlib estimator optimizes this, so this module trains a linear-softmax
-model with full-batch gradient descent, Spark-first:
-
-- ONE aggregation job per iteration: each partition computes its partial
-  per-class squared residuals and per-class gradient blocks with blocked
-  numpy (Arrow ``mapInPandas``); the driver sums ~numPartitions small rows.
-  The global 1/(N * L_i) factors multiply OUTSIDE the data sums — that is
-  what makes a single pass per iteration possible:
-      dL/dW = sum_{i>=1} G_i / (N * L_i),
-      G_i[:,k] = sum_j x_j * (r_ji * p_ji) * (delta_ik - p_jk)
-- assembled features are localCheckpointed once (every iteration re-reads
-  materialized columns, not the upstream plan);
-- Adam on the driver (the reference fits with gorgonia Adam,
-  nn.go:680-720), early stopping with patience on the best loss, and a
-  NaN-restart that rewinds to the best weights at a halved learning rate
-  (nn.go:772-800's restart behavior).
-
-At 100 TB: per-iteration cost is one map pass + a tiny driver reduce; the
-broadcast is the (F+1) x C weight matrix. State on the driver is O(F*C).
+``fit_nn`` is the one trainer (``model.fit(..., cost=...)`` routes here);
+see the "Full NN parity" section below for the Spark-first layout.
 """
 
 from __future__ import annotations
@@ -34,104 +19,13 @@ from dataclasses import dataclass, field
 
 import numpy as np
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from seafan_spark.session import unpersist_checkpoint
 
 from seafan_spark.pipeline import Pipeline
-
-
-@dataclass
-class SoftmaxLinearModel:
-    """Linear-softmax model fitted under the SoftRMS cost."""
-
-    weights: np.ndarray  # (n_feat + 1, n_classes); last row is the bias
-    n_classes: int
-    loss_history: list[float] = field(default_factory=list)
-
-    def prob_col(self, feats: Column) -> Column:
-        """Class-probability array column from an array<double> feature
-        column — pure JVM expressions (exp / sum), no Python at score time."""
-        W = self.weights
-        n_feat = W.shape[0] - 1
-        logits = [
-            sum(
-                (F.element_at(feats, f + 1) * float(W[f, k]) for f in range(1, n_feat)),
-                F.element_at(feats, 1) * float(W[0, k]),
-            )
-            + F.lit(float(W[n_feat, k]))
-            for k in range(self.n_classes)
-        ]
-        # max-logit subtraction mirrors the stabilized training pass:
-        # raw exp() overflows to Infinity past ~709, scoring NaN on rows
-        # the trainer handled fine
-        zmax = F.greatest(*logits) if len(logits) > 1 else logits[0]
-        exps = [F.exp(z - zmax) for z in logits]
-        den = sum(exps[1:], exps[0])
-        return F.array(*[e / den for e in exps])
-
-
-def _grad_pass(
-    d: DataFrame, W: np.ndarray, n_classes: int, nparts: int | None = None
-) -> tuple[np.ndarray, np.ndarray, int]:
-    """One distributed pass: returns (sum G_i blocks, per-class sum r^2, N).
-    When the caller reports more than ``_TREE_MERGE_MIN_PARTS`` tasks, the
-    per-task gradient rows are pre-summed JVM-side (see
-    ``_tree_merge_gradients``) so driver transfer stays O(buckets x |W|)."""
-    spark = d.sparkSession
-    bW = spark.sparkContext.broadcast(W)
-    fp1, C = W.shape
-    out_schema = T.StructType(
-        [
-            T.StructField("g", T.ArrayType(T.DoubleType())),  # C*(F+1)*C flattened
-            T.StructField("ss", T.ArrayType(T.DoubleType())),  # C
-            T.StructField("n", T.LongType()),
-        ]
-    )
-
-    def part(batches):
-        import pandas as pd
-
-        Wl = bW.value
-        G = np.zeros((C, fp1, C))
-        ss = np.zeros(C)
-        n = 0
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            X = np.vstack(pdf["_f"].to_numpy()).astype("float64")
-            X = np.hstack([X, np.ones((len(X), 1))])
-            y = pdf["_l"].to_numpy().astype("int64")
-            z = X @ Wl
-            z -= z.max(axis=1, keepdims=True)
-            p = np.exp(z)
-            p /= p.sum(axis=1, keepdims=True)
-            r = p.copy()
-            r[np.arange(len(y)), y] -= 1.0
-            ss += (r * r).sum(axis=0)
-            n += len(y)
-            s = r * p  # N x C: r_ji * p_ji
-            for i in range(1, C):
-                # G_i = X^T [ s_i * (e_i - p) ]  -> (F+1) x C
-                M = -p * s[:, [i]]
-                M[:, i] += s[:, i]
-                G[i] += X.T @ M
-        yield pd.DataFrame({"g": [G.ravel().tolist()], "ss": [ss.tolist()], "n": [n]})
-
-    mapped = d.mapInPandas(part, schema=out_schema)
-    if nparts is not None and nparts > _TREE_MERGE_MIN_PARTS:
-        mapped = _tree_merge_gradients(mapped, [("g", C * fp1 * C), ("ss", C)])
-    rows = mapped.collect()
-    G = np.zeros((C, fp1, C))
-    ss = np.zeros(C)
-    n = 0
-    for r in rows:
-        G += np.array(r["g"]).reshape(C, fp1, C)
-        ss += np.array(r["ss"])
-        n += r["n"]
-    return G, ss, n
 
 
 def _iteration_layout(data_ck: DataFrame, nrows: int) -> tuple[DataFrame, DataFrame, int]:
@@ -151,87 +45,6 @@ def _iteration_layout(data_ck: DataFrame, nrows: int) -> tuple[DataFrame, DataFr
         unpersist_checkpoint(data_ck)
         return spread, spread, nparts
     return data_ck, data_ck.coalesce(nparts), nparts
-
-
-def fit_softrms(
-    pipe: Pipeline,
-    ms,
-    max_iter: int = 200,
-    lr: float = 0.1,
-    patience: int = 20,
-    tol: float = 1e-7,
-) -> SoftmaxLinearModel:
-    """Fit ``ms`` (a classification ModSpec) under the SoftRMS cost.
-
-    Reuses the model layer's feature assembly and label resolution; the
-    head must be softmax/sigmoid (classification). Hidden layers are
-    dropped (same policy as the MLlib mapping, model.py:14-29).
-    """
-    from pyspark.ml.functions import vector_to_array
-
-    from seafan_spark.model import ModSpecError, _assemble, _label_col
-
-    d_lab, label, n_classes, kind = _label_col(pipe, ms)
-    if kind != "classification":
-        raise ModSpecError("fit_softrms: SoftRMS is a classification cost (softmax head)")
-    lab_pipe = pipe._derive(d_lab)
-    d, _, n_feat = _assemble(lab_pipe, ms)
-    C = max(n_classes, 2)
-    data_ck = d.select(
-        vector_to_array(F.col("_features")).alias("_f"),
-        F.col(label).cast("int").alias("_l"),
-    ).localCheckpoint(eager=True)
-    nrows = data_ck.count()
-    data_ck, data, nparts = _iteration_layout(data_ck, nrows)
-
-    W = np.zeros((n_feat + 1, C))
-    best_W, best_loss, since_best = W.copy(), float("inf"), 0
-    m = np.zeros_like(W)
-    v = np.zeros_like(W)
-    b1, b2, eps = 0.9, 0.999, 1e-8
-    history: list[float] = []
-    t = 0
-    it = 0
-    try:
-        while it < max_iter:
-            it += 1
-            G, ss, n = _grad_pass(data, W, C, nparts=nparts)
-            L_i = np.sqrt(ss / max(n, 1))
-            loss = float(L_i[1:].sum())
-            if not np.isfinite(loss):
-                # NaN restart: rewind to the best weights, halve the rate,
-                # and reset patience — the first post-restart loss equals
-                # the best loss, which must not immediately trip early
-                # stopping
-                W, m, v, t = best_W.copy(), np.zeros_like(W), np.zeros_like(W), 0
-                since_best = 0
-                lr *= 0.5
-                if lr < 1e-8:
-                    break
-                continue
-            history.append(loss)
-            if loss < best_loss - tol:
-                best_loss, best_W, since_best = loss, W.copy(), 0
-            else:
-                since_best += 1
-                if since_best >= patience:
-                    break
-            grad = np.zeros_like(W)
-            for i in range(1, C):
-                if L_i[i] > 0:
-                    grad += G[i] / (n * L_i[i])
-            t += 1
-            m = b1 * m + (1 - b1) * grad
-            v = b2 * v + (1 - b2) * grad * grad
-            mh = m / (1 - b1**t)
-            vh = v / (1 - b2**t)
-            W = W - lr * mh / (np.sqrt(vh) + eps)
-    finally:
-        # the checkpointed feature frame is trainer scratch — the returned
-        # model is driver-side weights; freeing its blocks keeps repeated
-        # fits in one session from accumulating dead executor memory
-        unpersist_checkpoint(data_ck)
-    return SoftmaxLinearModel(weights=best_W, n_classes=C, loss_history=history)
 
 
 # ---------------------------------------------------------------------------
@@ -647,7 +460,7 @@ def fit_nn(
     fcs_spec = ms.fcs()
     # classification trains a softmax head over C units even for the
     # sigmoid(size 1) spec — identical probabilities, one code path
-    # (fit_softrms does the same; nn.go builds sigmoid nets separately)
+    # (nn.go builds sigmoid nets separately)
     C = max(n_classes, 2) if kind == "classification" else 1
     head = "softmax" if kind == "classification" else "linear"
     sizes = [l.size for l in fcs_spec[:-1]] + [C]

@@ -233,13 +233,42 @@ def test_ngram_jaccard_exact(spark):
     assert got == {(1, 2): pytest.approx(4 / 6, abs=1e-6)}
 
 
-def test_simhash(doc_pipe):
+def test_simhash(spark, doc_pipe):
     pairs = simhash_pairs(doc_pipe, "doc_id", "text", max_hamming=6)
     got = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
     assert (0, 40) in got and (0, 41) in got and (40, 41) in got
     # identical docs -> hamming 0
     h = {(r["id_a"], r["id_b"]): r["hamming"] for r in pairs.collect()}
     assert h[(0, 40)] == 0
+
+    # one hot bucket: 300 near-identical docs (case/whitespace variants
+    # the shingler normalizes away) share every chunk key, so the bucket
+    # must stream all 300*299/2 pairs
+    m = 300
+    docs = [
+        " " * (i % 3) + (BASE.upper() if i % 2 else BASE) for i in range(m)
+    ]
+    p = vec_to_pipe(spark, {"doc_id": list(range(m)), "text": docs})
+    got = simhash_pairs(p, "doc_id", "text", max_hamming=6).agg(
+        F.count(F.lit(1)).alias("n"),
+        F.max("hamming").alias("h"),
+        F.sum((F.col("id_a") >= F.col("id_b")).cast("int")).alias("bad"),
+    ).collect()[0]
+    assert got["n"] == m * (m - 1) // 2 == 44_850
+    assert got["h"] == 0 and got["bad"] == 0
+
+
+def test_pairs_skip_null_ids(spark):
+    """Rows with a NULL id are not documents: they must neither pair nor
+    merge into one signature."""
+    text = BASE + " shared tail"
+    p = vec_to_pipe(
+        spark, {"doc_id": [1, None, 2, None], "text": [text] * 4}
+    )
+    mh = minhash_pairs(p, "doc_id", "text", num_hashes=64, bands=16)
+    assert [(r["id_a"], r["id_b"]) for r in mh.collect()] == [(1, 2)]
+    sh = simhash_pairs(p, "doc_id", "text", max_hamming=6)
+    assert [(r["id_a"], r["id_b"]) for r in sh.collect()] == [(1, 2)]
 
 
 def test_hamming_col(spark):

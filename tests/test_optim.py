@@ -1,4 +1,5 @@
-"""SoftRMS distributed trainer (optim.py): convergence + scoring."""
+"""Distributed NN trainer (optim.fit_nn): SoftRMS/CE/RMS convergence,
+gradients, tree merge and scoring."""
 
 import math
 import random
@@ -8,7 +9,6 @@ import pytest
 
 from seafan_spark.encode import append_cat, make_one_hot
 from seafan_spark.model import parse_modspec
-from seafan_spark.optim import fit_softrms
 from seafan_spark.sources import vec_to_pipe
 from pyspark.sql import functions as F
 
@@ -25,27 +25,27 @@ def _binary_pipe(spark, n=400, seed=7):
 
 
 def test_softrms_binary_converges(spark):
+    from seafan_spark.model import add_fitted, fit
+
     p = _binary_pipe(spark)
     ms = parse_modspec(["Input(x1+x2)", "FC(size:1, activation:sigmoid)", "Target(y)"])
-    model = fit_softrms(p, ms, max_iter=150, lr=0.2, patience=30)
+    fr = fit(p, ms, cost="softrms", max_iter=150, lr=0.2, patience=30)
     # training loss decreased substantially
-    assert model.loss_history[-1] < 0.6 * model.loss_history[0]
-    # score via the JVM column path and check training accuracy
-    from seafan_spark.model import _assemble, _label_col
-    from pyspark.ml.functions import vector_to_array
-
-    d_lab, label, _, _ = _label_col(p, ms)
-    d, _, _ = _assemble(p._derive(d_lab), ms)
-    scored = d.withColumn("_probs", model.prob_col(vector_to_array(F.col("_features"))))
+    hist = fr.model.loss_history
+    assert hist[-1] < 0.6 * hist[0]
+    # score through the model layer and check training accuracy
+    scored = add_fitted(fr, p, name="fit")
     acc = (
-        scored.withColumn("_pred", (F.element_at("_probs", 2) > 0.5).cast("double"))
-        .agg(F.avg((F.col("_pred") == F.col(label)).cast("double")))
+        scored.df.withColumn("_pred", (F.col("fit") > 0.5).cast("double"))
+        .agg(F.avg((F.col("_pred") == F.col("y")).cast("double")))
         .collect()[0][0]
     )
     assert acc > 0.9
 
 
 def test_softrms_multiclass(spark):
+    from seafan_spark.model import fit
+
     rng = random.Random(11)
     x1, x2, lab = [], [], []
     centers = {"a": (0.0, 2.0), "b": (2.0, -2.0), "c": (-2.0, -2.0)}
@@ -59,18 +59,19 @@ def test_softrms_multiclass(spark):
     p = append_cat(p, "lab")
     p = make_one_hot(p, "lab", "lab_oh")
     ms = parse_modspec(["Input(x1+x2)", "FC(size:3, activation:softmax)", "Target(lab_oh)"])
-    model = fit_softrms(p, ms, max_iter=150, lr=0.2, patience=30)
-    assert model.n_classes == 3
-    assert model.loss_history[-1] < 0.5 * model.loss_history[0]
+    fr = fit(p, ms, cost="softrms", max_iter=150, lr=0.2, patience=30)
+    assert fr.model.n_classes == 3
+    hist = fr.model.loss_history
+    assert hist[-1] < 0.5 * hist[0]
 
 
 def test_softrms_rejects_regression(spark):
-    from seafan_spark.model import ModSpecError
+    from seafan_spark.model import ModSpecError, fit
 
     p = _binary_pipe(spark, n=20)
     ms = parse_modspec(["Input(x1+x2)", "FC(size:1, activation:linear)", "Target(y)"])
     with pytest.raises(ModSpecError, match="classification"):
-        fit_softrms(p, ms)
+        fit(p, ms, cost="softrms")
 
 
 # ---------------------------------------------------------------------------
@@ -286,28 +287,38 @@ def test_tree_merge_gradients_matches_driver_sum(spark):
     assert len(merged) <= 5
 
 
-def test_grad_pass_tree_path_matches_direct(spark):
-    """_grad_pass with the tree merge forced on returns the same
-    (G, ss, n) as the direct-collect path."""
-    from seafan_spark.model import _assemble, _label_col, parse_modspec
-    from seafan_spark.optim import _grad_pass
+def test_nn_pass_tree_path_matches_direct(spark):
+    """One fit_nn gradient pass summed through the JVM tree merge returns
+    the same (g, ls, n) as the direct per-task collect."""
+    from seafan_spark.optim import (
+        _NN_OUT,
+        _Block,
+        _nn_partial,
+        _shapes,
+        _tree_merge_gradients,
+    )
 
     p = _binary_pipe(spark, n=200, seed=13)
-    ms = parse_modspec(["Input(x1+x2)", "FC(size:1, activation:sigmoid)", "Target(y)"])
-    d_lab, label, _, _ = _label_col(p, ms)
-    d, _, n_feat = _assemble(p._derive(d_lab), ms)
-    from pyspark.ml.functions import vector_to_array
-    from pyspark.sql import functions as FF
+    blocks = [_Block("x1", "cts"), _Block("x2", "cts")]
+    shapes = _shapes(blocks, [2])
+    nparam = sum(r * c for _, (r, c) in shapes)
+    w = np.random.default_rng(5).normal(size=nparam)
+    d = p.df.select("x1", "x2", F.col("y").alias("_l")).repartition(8)
+    pf = _nn_partial(blocks, shapes, [], "softmax", 2, "ce", [0.0], 42, 1, 1.0, w, None)
+    mapped = d.mapInPandas(pf, schema=_NN_OUT)
 
-    d2 = d.select(
-        vector_to_array(FF.col("_features")).alias("_f"),
-        FF.col(label).cast("long").alias("_l"),
-    ).repartition(8)
-    W = np.random.default_rng(5).normal(size=(n_feat + 1, 2))
-    G1, ss1, n1 = _grad_pass(d2, W, 2, nparts=None)
-    G2, ss2, n2 = _grad_pass(d2, W, 2, nparts=10_000)  # force tree path
-    assert n1 == n2
-    assert np.allclose(G1, G2) and np.allclose(ss1, ss2)
+    def total(rows):
+        g, ls, n = np.zeros(nparam), np.zeros(2), 0
+        for r in rows:
+            g += np.array(r["g"]); ls += np.array(r["ls"]); n += r["n"]
+        return g, ls, n
+
+    g1, ls1, n1 = total(mapped.collect())
+    g2, ls2, n2 = total(
+        _tree_merge_gradients(mapped, [("g", nparam), ("ls", 2)]).collect()
+    )
+    assert n1 == n2 == 200
+    assert np.allclose(g1, g2) and np.allclose(ls1, ls2)
 
 
 def test_nn_transform_fixed_weights_matches_numpy(spark):

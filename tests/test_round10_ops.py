@@ -1,7 +1,7 @@
 """Round-10 operator tests: the keyed range-partition scan substrate,
 the scale-shaped causal ops that ride on it, the Qini coefficient, the
 greedy matcher, the Mann-Kendall pair budget / tie contract, guard
-memoization, adaptive IRR step batching, and multimodal string ids.
+memoization, grouped IRR bisection at scale, and multimodal string ids.
 """
 from __future__ import annotations
 
@@ -300,38 +300,32 @@ def test_survival_composition_single_guard_job(spark):
     guards._BOUNDED_MEMO.clear()
 
 
-# -------------------------------------------- adaptive irr batching ----
+# --------------------------------------------- irr_by_bisect at scale ----
 
-def test_auto_batch_scales_with_relation_size():
-    from seafan_spark.agg import _auto_batch
+def test_irr_by_bisect_many_groups_matches_scalar(spark):
+    """Over 100k flow rows in 1,000 groups, spread over several input
+    partitions: sampled groups' rates are BIT-EQUAL to irr_bisect on
+    that group's flows alone (the default cost folds in ascending flow
+    order, so partitioning cannot move a bit)."""
+    from seafan_spark.agg import irr_bisect, irr_by_bisect
 
-    assert _auto_batch(False, 10_000_000) == 3
-    assert _auto_batch(True, 800) == 10
-    assert _auto_batch(True, 10_000) == 7
-    near = _auto_batch(True, 100_000)
-    assert 3 <= near <= 5  # ~2M rows/pass at the coalesce threshold
-    assert _auto_batch(True, 1) == 10
-
-
-def test_irr_by_bisect_rate_independent_of_batch(spark):
-    """The dyadic walk is bit-equal for ANY batch width (the decisions
-    visit the same rounded midpoint signs), so the adaptive width can
-    never change a rate."""
-    from seafan_spark.agg import irr_by_bisect
-
-    rows = []
-    for g in range(3):
-        rows.append((f"g{g}", 0, -100.0))
-        for i in range(1, 6):
-            rows.append((f"g{g}", i, 30.0 + 2.0 * g))
-    df = spark.createDataFrame(rows, "k string, i int, v double")
-    a = {r["k"]: r["rate"] for r in
-         irr_by_bisect(df, ["k"], "v", ["i"], steps=20, batch=10).collect()}
-    b = {r["k"]: r["rate"] for r in
-         irr_by_bisect(df, ["k"], "v", ["i"], steps=20, batch=4).collect()}
-    c = {r["k"]: r["rate"] for r in
-         irr_by_bisect(df, ["k"], "v", ["i"], steps=20, batch=None).collect()}
-    assert a == b == c
+    per = 110
+    df = spark.range(0, 1_000 * per, numPartitions=7).select(
+        (F.col("id") % 1_000).alias("g"),
+        (F.col("id") / 1_000).cast("int").alias("i"),
+        F.when(F.col("id") < 1_000, F.lit(-100.0))
+        .otherwise(1.0 + F.pmod(F.hash("id"), F.lit(1000)) / 100.0)
+        .alias("v"),
+    )
+    grouped = {
+        r["g"]: r["rate"]
+        for r in irr_by_bisect(df, ["g"], "v", ["i"]).collect()
+    }
+    assert len(grouped) == 1_000
+    assert all(r is not None for r in grouped.values())
+    for g in (0, 517, 999):
+        solo = irr_bisect(df.filter(F.col("g") == g), "v", ["i"])
+        assert grouped[g] == solo, f"group {g}: {grouped[g]} != {solo}"
 
 
 # ---------------------------------------------- multimodal string ids ----
