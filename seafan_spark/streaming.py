@@ -15,16 +15,38 @@ is north-star extension territory, designed Spark-first:
 At 100 TB / 1000 executors: tumbling/sliding/session aggregations shuffle
 once on (key, window) with partial aggregation map-side; watermarks bound
 the state store; ``maxFilesPerTrigger`` paces source ingestion.
+
+*Store maintenance.* The eight ``stream_*_ingest`` sinks keep parquet
+stores (sketches, summaries, signature/vector stores, ...) and share one
+skeleton, :func:`_ingest`. Each sink is only a per-batch step: (batch,
+current store or None) -> rows per output path, each either a
+replacement or an append. The skeleton drains the stream with the
+``availableNow`` trigger and runs each batch inside
+``session.checkpoint_scope``. A replacement is written to a sibling
+directory and swapped in; an append's part files are moved into the path
+under batch-tagged names (O(batch), never a rewrite of the store). Every
+output path keeps a ``_seafan_batch`` marker with the checkpoint location
+and the last applied ``batch_id``, and skips any batch at or below it.
+So a micro-batch that Structured Streaming replays from the same
+checkpoint (it re-runs a batch whose commit was not logged) leaves every
+output as one run did. A different checkpoint, such as the default
+fresh temporary one, never matches the marker and always applies.
 """
 
 from __future__ import annotations
 
+import hashlib
+import json
+import shutil
 import tempfile
-from typing import Iterable, Sequence
+from typing import Callable, NamedTuple, Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamWriter
+
+from seafan_spark.session import checkpoint_scope
 
 EVENT_TIME = "_event_time"
 
@@ -80,8 +102,21 @@ def read_events_stream(
     return reader.parquet(path)
 
 
-def _finish_window(grouped, aggs: dict[str, Column], keys: Sequence[str]) -> DataFrame:
-    out = grouped.agg(*[c.alias(n) for n, c in aggs.items()])
+def _window_agg(
+    df: DataFrame,
+    aggs: dict[str, Column],
+    window: Column,
+    keys: Sequence[str],
+    ts_col: str,
+    watermark: str | None,
+) -> DataFrame:
+    """Shared body of the window aggregations: event time, the
+    streaming-only watermark, one groupBy on (``window``, keys). Window
+    bounds come out as epoch-second bigints."""
+    d = ensure_event_time(df, ts_col)
+    if watermark is not None and d.isStreaming:
+        d = d.withWatermark(EVENT_TIME, watermark)
+    out = d.groupBy(window.alias("_w"), *keys).agg(*[c.alias(n) for n, c in aggs.items()])
     return out.select(
         F.unix_timestamp(F.col("_w.start")).alias("window_start"),
         F.unix_timestamp(F.col("_w.end")).alias("window_end"),
@@ -102,11 +137,7 @@ def tumbling_agg(
     DataFrame (oracle path) and a streaming one (pass ``watermark`` for
     append-mode emission). Window bounds come out as epoch-second bigints —
     timezone-unambiguous on both engines."""
-    d = ensure_event_time(df, ts_col)
-    if watermark is not None and d.isStreaming:
-        d = d.withWatermark(EVENT_TIME, watermark)
-    g = d.groupBy(F.window(EVENT_TIME, window).alias("_w"), *keys)
-    return _finish_window(g, aggs, keys)
+    return _window_agg(df, aggs, F.window(EVENT_TIME, window), keys, ts_col, watermark)
 
 
 def sliding_agg(
@@ -120,11 +151,9 @@ def sliding_agg(
 ) -> DataFrame:
     """Sliding (hopping) event-time windows; each event lands in
     window/slide overlapping windows."""
-    d = ensure_event_time(df, ts_col)
-    if watermark is not None and d.isStreaming:
-        d = d.withWatermark(EVENT_TIME, watermark)
-    g = d.groupBy(F.window(EVENT_TIME, window, slide).alias("_w"), *keys)
-    return _finish_window(g, aggs, keys)
+    return _window_agg(
+        df, aggs, F.window(EVENT_TIME, window, slide), keys, ts_col, watermark
+    )
 
 
 def sessionize(
@@ -139,11 +168,9 @@ def sessionize(
     arrive within ``gap``; session end = last event + gap
     (``F.session_window`` semantics — a new session starts when the
     inter-event gap is >= ``gap``)."""
-    d = ensure_event_time(df, ts_col)
-    if watermark is not None and d.isStreaming:
-        d = d.withWatermark(EVENT_TIME, watermark)
-    g = d.groupBy(F.session_window(F.col(EVENT_TIME), gap).alias("_w"), *keys)
-    return _finish_window(g, aggs, keys)
+    return _window_agg(
+        df, aggs, F.session_window(F.col(EVENT_TIME), gap), keys, ts_col, watermark
+    )
 
 
 def stream_dedup(
@@ -214,13 +241,6 @@ def stream_join(
 # ------------------------------------------------------------------------
 
 _STATE_SCHEMA = "n BIGINT, total DOUBLE"
-_RUNNING_OUT_SCHEMA = T.StructType(
-    [
-        T.StructField("user_id", T.LongType()),
-        T.StructField("n", T.LongType()),
-        T.StructField("total", T.DoubleType()),
-    ]
-)
 
 
 def _running_totals_fn(key, pdf_iter, state):
@@ -247,13 +267,7 @@ def running_totals_stream(df: DataFrame, key: str = "user_id", value: str = "val
 
     # the output key field's type follows the input key column (a
     # hardcoded LongType would fail at Arrow conversion for string keys)
-    out_schema = T.StructType(
-        [
-            T.StructField("user_id", df.schema[key].dataType),
-            T.StructField("n", T.LongType()),
-            T.StructField("total", T.DoubleType()),
-        ]
-    )
+    out_schema = f"user_id {df.schema[key].dataType.simpleString()}, {_STATE_SCHEMA}"
     return (
         df.select(F.col(key).alias("user_id"), F.col(value).alias("value"))
         .groupBy("user_id")
@@ -267,6 +281,34 @@ def running_totals_stream(df: DataFrame, key: str = "user_id", value: str = "val
     )
 
 
+def _run(
+    sdf: DataFrame,
+    name: str,
+    sink: Callable[[DataStreamWriter, str], DataStreamWriter],
+    checkpoint_dir: str | None = None,
+    timeout_sec: int = 300,
+) -> None:
+    """Drain ``sdf`` through ``sink(writer, checkpoint)`` with the
+    ``availableNow`` trigger (process everything currently in the source,
+    then stop). Without ``checkpoint_dir`` the query gets a fresh
+    temporary checkpoint, removed afterwards."""
+    ckpt = checkpoint_dir or tempfile.mkdtemp(prefix="seafan_stream_ckpt_")
+    try:
+        q = (
+            sink(sdf.writeStream, ckpt)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(timeout_sec)
+        if q.isActive:
+            q.stop()
+            raise TimeoutError(f"{name} did not finish in {timeout_sec}s")
+    finally:
+        if checkpoint_dir is None:
+            shutil.rmtree(ckpt, ignore_errors=True)
+
+
 def run_to_memory(
     sdf: DataFrame,
     name: str,
@@ -277,26 +319,142 @@ def run_to_memory(
     process everything currently in the source, then stop) into an
     in-memory table and return it as a DataFrame. Test/dev harness; real
     deployments point writeStream at kafka/parquet/delta instead."""
-    import shutil
+    _run(
+        sdf,
+        f"stream {name}",
+        lambda w, _: w.format("memory").queryName(name).outputMode(output_mode),
+        timeout_sec=timeout_sec,
+    )
+    # the memory sink holds the rows; the checkpoint is transient state
+    return sdf.sparkSession.table(name)
 
-    ckpt = tempfile.mkdtemp(prefix="seafan_stream_ckpt_")
+
+# ------------------------------------------------------------------------
+# Replay-safe store maintenance: the one skeleton behind stream_*_ingest
+# ------------------------------------------------------------------------
+
+_MARKER = "_seafan_batch"
+
+
+class _Write(NamedTuple):
+    """One output of a sink step: ``df`` replaces everything at ``path``,
+    or, with ``append``, is added to it."""
+
+    path: str
+    df: DataFrame
+    append: bool = False
+
+
+def _fs(spark: SparkSession, path: str):
+    P = spark._jvm.org.apache.hadoop.fs.Path
+    return P(path).getFileSystem(spark._jsc.hadoopConfiguration()), P
+
+
+def _applied(spark: SparkSession, path: str, ckpt: str) -> int:
+    """Last batch id the query checkpointed at ``ckpt`` applied to
+    ``path``; -1 when none did, or another query wrote the path last."""
+    fs, P = _fs(spark, path)
+    marker = P(path, _MARKER)
+    if not fs.exists(marker):
+        return -1
+    f = fs.open(marker)
     try:
-        q = (
-            sdf.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(timeout_sec)
-        if q.isActive:
-            q.stop()
-            raise TimeoutError(f"stream {name} did not finish in {timeout_sec}s")
-        # the memory sink holds the rows; the checkpoint is transient state
-        return sdf.sparkSession.table(name)
+        mark = json.loads(f.readUTF())
     finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+        f.close()
+    return mark["batch_id"] if mark["checkpoint"] == ckpt else -1
+
+
+def _mark(spark: SparkSession, path: str, ckpt: str, batch_id: int) -> None:
+    fs, P = _fs(spark, path)
+    f = fs.create(P(path, _MARKER), True)
+    try:
+        f.writeUTF(json.dumps({"checkpoint": ckpt, "batch_id": batch_id}))
+    finally:
+        f.close()
+
+
+def _purge(spark: SparkSession, path: str, tag: str) -> None:
+    """Delete ``path``'s files named ``tag*``: what an append commit of
+    this batch moved in before it was cut short of its marker."""
+    fs, P = _fs(spark, path)
+    for s in fs.globStatus(P(path, tag + "*")) or []:
+        fs.delete(s.getPath(), False)
+
+
+def _read_store(spark: SparkSession, path: str) -> DataFrame | None:
+    """The current store, or None before its first write. A replacement
+    swap cut between its two renames is rolled back first."""
+    fs, P = _fs(spark, path)
+    prev = P(path.rstrip("/") + ".__prev")
+    if not fs.exists(P(path)) and fs.exists(prev):
+        fs.rename(prev, P(path))
+    return spark.read.parquet(path) if fs.exists(P(path)) else None
+
+
+def _commit(spark: SparkSession, w: _Write, ckpt: str, batch_id: int, tag: str) -> None:
+    """Land one step output and record ``batch_id`` in its marker. Both
+    kinds are first written to the sibling ``<path>.__staged``. A
+    replacement (marker included) is then swapped in, so the old store is
+    never overwritten in place. An append's part files are moved into
+    ``path`` under ``tag``-prefixed names: O(batch) work, never a rewrite
+    of the O(corpus) path."""
+    fs, P = _fs(spark, w.path)
+    path = w.path.rstrip("/")
+    staged, prev = path + ".__staged", P(path + ".__prev")
+    w.df.write.mode("overwrite").parquet(staged)
+    if w.append:
+        _purge(spark, path, tag)
+        fs.mkdirs(P(path))
+        for s in fs.listStatus(P(staged)):
+            name = s.getPath().getName()
+            if not name.startswith(("_", ".")):
+                fs.rename(s.getPath(), P(path, tag + name))
+        fs.delete(P(staged), True)
+        _mark(spark, path, ckpt, batch_id)
+    else:
+        _mark(spark, staged, ckpt, batch_id)
+        fs.delete(prev, True)
+        if fs.exists(P(path)):
+            fs.rename(P(path), prev)
+        fs.rename(P(staged), P(path))
+        fs.delete(prev, True)
+
+
+def _ingest(
+    stream_df: DataFrame,
+    name: str,
+    store_path: str,
+    step: Callable[[DataFrame, DataFrame | None], list[_Write]],
+    checkpoint_dir: str | None,
+    timeout_sec: int,
+) -> None:
+    """Run a store-maintenance sink. ``step(batch, store)`` maps one
+    micro-batch and the current store at ``store_path`` (None before the
+    first write) to its outputs, the store's own write last. Each batch
+    runs inside :func:`~seafan_spark.session.checkpoint_scope`. An output
+    whose marker (same checkpoint) is at or above the batch id is
+    skipped; so is the whole batch when the store's is, because the
+    store commits last."""
+
+    def apply(batch_df: DataFrame, batch_id: int, ckpt: str) -> None:
+        spark = batch_df.sparkSession
+        if _applied(spark, store_path, ckpt) >= batch_id:
+            return
+        tag = f"b{batch_id}-{hashlib.md5(ckpt.encode()).hexdigest()[:8]}-"
+        with checkpoint_scope(spark):
+            _purge(spark, store_path, tag)
+            for w in step(batch_df, _read_store(spark, store_path)):
+                if _applied(spark, w.path, ckpt) < batch_id:
+                    _commit(spark, w, ckpt, batch_id, tag)
+
+    _run(
+        stream_df,
+        name,
+        lambda w, ckpt: w.foreachBatch(lambda df, i: apply(df, i, ckpt)),
+        checkpoint_dir,
+        timeout_sec,
+    )
 
 
 def stream_dedup_ingest(
@@ -331,33 +489,21 @@ def stream_dedup_ingest(
     state stores are for per-key state that fits executors. At scale the
     same loop runs with the store bucketed by band key.
 
-    Delivery note: parquet appends are at-least-once under micro-batch
-    retries — production deployments should write both sinks through a
-    transactional table format (or key the append on ``batch_id``) for
-    exactly-once; this harness targets the ``availableNow`` test/dev
-    shape. Runs the query to completion (availableNow) and returns."""
-    import shutil
-
+    A micro-batch replayed from the same checkpoint lands once per
+    output (module docstring, *Store maintenance*)."""
     from seafan_spark.llmops.dedup import (
         minhash_pairs_incremental,
         minhash_signatures,
     )
 
-    own_ckpt = checkpoint_dir is None
-    ckpt = checkpoint_dir or tempfile.mkdtemp(prefix="seafan_dedup_ckpt_")
-
-    def ingest(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
+    def step(batch_df: DataFrame, store: DataFrame | None) -> list[_Write]:
         new_sig = minhash_signatures(
             batch_df, id_col, text_col, num_hashes, shingle_k, portable
         ).localCheckpoint(eager=True)
-        try:
-            store = spark.read.parquet(store_path)
-        except Exception:  # first batch: no store yet
-            store = spark.createDataFrame([], new_sig.schema)
         pairs = minhash_pairs_incremental(
             batch_df,
-            store,
+            store if store is not None
+            else batch_df.sparkSession.createDataFrame([], new_sig.schema),
             id_col,
             text_col,
             num_hashes=num_hashes,
@@ -368,7 +514,6 @@ def stream_dedup_ingest(
             check_store=False,  # the store is our own append lineage
             new_sig=new_sig,
         ).localCheckpoint(eager=True)
-        pairs.write.mode("append").parquet(pairs_path)
         to_add = new_sig
         if not keep_dups:
             # keep-first: a new doc that matched anything earlier stays out
@@ -379,44 +524,25 @@ def stream_dedup_ingest(
             # keep-lowest-id and let the new side of a (new, store) pair
             # with new_id < store_id slip into the store.
             #
-            # Scale shape: pairs hold ONLY new-vs-store and new-vs-new
-            # sides, so "partner is in the store" == "partner is not in
-            # this batch" — resolved against the batch's own (small,
+            # So id_b always loses, and id_a loses too when its partner is
+            # a stored doc. Scale shape: pairs hold ONLY new-vs-store and
+            # new-vs-new sides, so "partner is in the store" == "partner is
+            # not in this batch" — resolved against the batch's own (small,
             # broadcast) id set, NEVER by scanning the O(corpus) store.
-            new_ids = new_sig.select(F.col("_id").alias("_other"))
-            sided = pairs.select(
-                F.col("id_a").alias("_id"), F.col("id_b").alias("_other")
-            ).union(
-                pairs.select(F.col("id_b").alias("_id"), F.col("id_a").alias("_other"))
+            new_ids = new_sig.select(F.col("_id").alias("id_b"))
+            vs_store = pairs.join(F.broadcast(new_ids), "id_b", "left_anti")
+            dup_new = pairs.select(F.col("id_b").alias("_id")).union(
+                vs_store.select(F.col("id_a").alias("_id"))
             )
-            vs_store = sided.join(F.broadcast(new_ids), "_other", "left_anti").select("_id")
-            within_batch = pairs.select(F.col("id_b").alias("_id"))
-            dup_new = vs_store.union(within_batch).distinct()
-            to_add = to_add.join(F.broadcast(dup_new), "_id", "left_anti")
+            to_add = to_add.join(F.broadcast(dup_new.distinct()), "_id", "left_anti")
         # re-ingested ids keep their original store row (append-only).
         # NOTE the store is the BIG side here, so no broadcast hint — the
         # anti-join shuffles on _id (AQE may still broadcast a small store)
-        if store.isEmpty():
-            to_add.write.mode("append").parquet(store_path)
-        else:
-            to_add.join(store.select("_id"), "_id", "left_anti").write.mode(
-                "append"
-            ).parquet(store_path)
+        if store is not None:
+            to_add = to_add.join(store.select("_id"), "_id", "left_anti")
+        return [_Write(pairs_path, pairs, append=True), _Write(store_path, to_add, append=True)]
 
-    try:
-        q = (
-            stream_docs.writeStream.foreachBatch(ingest)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(timeout_sec)
-        if q.isActive:
-            q.stop()
-            raise TimeoutError(f"dedup ingest did not finish in {timeout_sec}s")
-    finally:
-        if own_ckpt:
-            shutil.rmtree(ckpt, ignore_errors=True)
+    _ingest(stream_docs, "dedup ingest", store_path, step, checkpoint_dir, timeout_sec)
 
 
 def stream_embed_ingest(
@@ -440,29 +566,23 @@ def stream_embed_ingest(
     bucket keys, append discovered pairs (new-vs-store and new-vs-new) to
     ``pairs_path``, and append the prepared rows to the store so later
     batches match against them. Store rows are never re-normalized or
-    re-bucketed. Same at-least-once append caveat as the dedup ingest."""
-    import shutil
+    re-bucketed.
 
+    A micro-batch replayed from the same checkpoint lands once per
+    output (module docstring, *Store maintenance*)."""
     from seafan_spark.llmops.dedup import (
         embedding_neardup_incremental,
         embedding_store_prepare,
     )
 
-    own_ckpt = checkpoint_dir is None
-    ckpt = checkpoint_dir or tempfile.mkdtemp(prefix="seafan_embed_ckpt_")
-
-    def ingest(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
+    def step(batch_df: DataFrame, store: DataFrame | None) -> list[_Write]:
         prepared = embedding_store_prepare(
             batch_df, id_col, vec_col, dim, planes, seed
         ).localCheckpoint(eager=True)
-        try:
-            store = spark.read.parquet(store_path)
-        except Exception:  # first batch: no store yet (append-mode sink)
-            store = spark.createDataFrame([], prepared.schema)
         pairs = embedding_neardup_incremental(
             batch_df,
-            store,
+            store if store is not None
+            else batch_df.sparkSession.createDataFrame([], prepared.schema),
             id_col,
             vec_col,
             dim,
@@ -471,30 +591,13 @@ def stream_embed_ingest(
             seed=seed,
             probe_bits=probe_bits,
             new_prepared=prepared,
-        ).localCheckpoint(eager=True)
-        pairs.write.mode("append").parquet(pairs_path)
-        # re-ingested ids keep their original store row (append-only)
-        if store.isEmpty():
-            prepared.write.mode("append").parquet(store_path)
-        else:
-            prepared.join(store.select("_id"), "_id", "left_anti").write.mode(
-                "append"
-            ).parquet(store_path)
-
-    try:
-        q = (
-            stream_vecs.writeStream.foreachBatch(ingest)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination(timeout_sec)
-        if q.isActive:
-            q.stop()
-            raise TimeoutError(f"embed ingest did not finish in {timeout_sec}s")
-    finally:
-        if own_ckpt:
-            shutil.rmtree(ckpt, ignore_errors=True)
+        # re-ingested ids keep their original store row (append-only)
+        if store is not None:
+            prepared = prepared.join(store.select("_id"), "_id", "left_anti")
+        return [_Write(pairs_path, pairs, append=True), _Write(store_path, prepared, append=True)]
+
+    _ingest(stream_vecs, "embed ingest", store_path, step, checkpoint_dir, timeout_sec)
 
 
 def stream_sketch_ingest(
@@ -519,58 +622,19 @@ def stream_sketch_ingest(
 
     Same state-shape rationale as :func:`stream_dedup_ingest`: the state
     is a queryable TABLE (group x bucket), which is what parquet is for —
-    not per-key executor state. The merged result is localCheckpointed
-    before the overwrite so the store is never read and rewritten in the
-    same job. Overwrite-per-batch is idempotent under micro-batch retries
-    for a re-run of the SAME batch (the merge of already-merged rows with
-    the same batch again would double-count — production deployments
-    should key batches by ``batch_id`` in a transactional table; this
-    harness targets the ``availableNow`` test/dev shape)."""
-    import shutil
+    not per-key executor state.
 
+    A micro-batch replayed from the same checkpoint lands once per
+    output (module docstring, *Store maintenance*)."""
     from seafan_spark.histogram import histogram_rollup, histogram_sketch_table
 
-    own_ckpt = checkpoint_dir is None
-    ckpt = checkpoint_dir or tempfile.mkdtemp(prefix="seafan_sketch_ckpt_")
+    def step(batch_df: DataFrame, store: DataFrame | None) -> list[_Write]:
+        merged = histogram_sketch_table(batch_df, group_cols, value_col, lo, hi, nbins)
+        if store is not None:
+            merged = histogram_rollup(store.unionByName(merged), group_cols)
+        return [_Write(store_path, merged)]
 
-    def ingest(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        batch_hist = histogram_sketch_table(
-            batch_df, group_cols, value_col, lo, hi, nbins
-        )
-        # distinguish "first batch, no store yet" from a real read failure:
-        # this sink OVERWRITES, so treating a transient store-read error as
-        # first-batch would silently replace the whole history with one
-        # batch's sketch (the append-mode dedup ingest above can afford a
-        # loose except; this one cannot)
-        from pyspark.errors import AnalysisException
-
-        try:
-            store = spark.read.parquet(store_path)
-            merged = histogram_rollup(
-                store.unionByName(batch_hist), group_cols
-            )
-        except AnalysisException as ex:
-            if "PATH_NOT_FOUND" not in str(ex):
-                raise
-            merged = batch_hist
-        merged = merged.localCheckpoint(eager=True)
-        merged.write.mode("overwrite").parquet(store_path)
-
-    try:
-        q = (
-            stream_df.writeStream.foreachBatch(ingest)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(timeout_sec)
-        if q.isActive:
-            q.stop()
-            raise TimeoutError(f"sketch ingest did not finish in {timeout_sec}s")
-    finally:
-        if own_ckpt:
-            shutil.rmtree(ckpt, ignore_errors=True)
+    _ingest(stream_df, "sketch ingest", store_path, step, checkpoint_dir, timeout_sec)
 
 
 def stream_heavy_hitters_ingest(
@@ -592,45 +656,19 @@ def stream_heavy_hitters_ingest(
     the store and its estimate undercounts by at most n/(width+1) — so
     "what tokens/domains/urls dominate the stream so far" is answered by
     reading kilobytes (``sketches.heavy_hitters_from_summary``), never
-    re-scanning the accumulated stream. Same strict first-batch handling
-    as :func:`stream_sketch_ingest`: this sink overwrites, so only a
-    PATH_NOT_FOUND counts as "no store yet"."""
-    import shutil
+    re-scanning the accumulated stream.
 
+    A micro-batch replayed from the same checkpoint lands once per
+    output (module docstring, *Store maintenance*)."""
     from seafan_spark.sketches import merge_mg_summaries, misra_gries_summary
 
-    own_ckpt = checkpoint_dir is None
-    ckpt = checkpoint_dir or tempfile.mkdtemp(prefix="seafan_hh_ckpt_")
+    def step(batch_df: DataFrame, store: DataFrame | None) -> list[_Write]:
+        merged = misra_gries_summary(batch_df, item_col, width)
+        if store is not None:
+            merged = merge_mg_summaries(store, merged, width)
+        return [_Write(store_path, merged)]
 
-    def ingest(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        batch_sum = misra_gries_summary(batch_df, item_col, width)
-        from pyspark.errors import AnalysisException
-
-        try:
-            store = spark.read.parquet(store_path)
-            merged = merge_mg_summaries(store, batch_sum, width)
-        except AnalysisException as ex:
-            if "PATH_NOT_FOUND" not in str(ex):
-                raise
-            merged = batch_sum
-        merged = merged.localCheckpoint(eager=True)
-        merged.write.mode("overwrite").parquet(store_path)
-
-    try:
-        q = (
-            stream_df.writeStream.foreachBatch(ingest)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(timeout_sec)
-        if q.isActive:
-            q.stop()
-            raise TimeoutError(f"heavy-hitter ingest did not finish in {timeout_sec}s")
-    finally:
-        if own_ckpt:
-            shutil.rmtree(ckpt, ignore_errors=True)
+    _ingest(stream_df, "heavy-hitter ingest", store_path, step, checkpoint_dir, timeout_sec)
 
 
 def stream_upsert_ingest(
@@ -662,20 +700,15 @@ def stream_upsert_ingest(
     Same state-shape rationale as the other ingest loops: the state is a
     queryable keyed TABLE (what parquet is for), not per-key executor
     state; at scale the store is key-bucketed so the per-batch merge join
-    is co-located. The merged store is localCheckpointed before the
-    overwrite so it is never read and rewritten in the same job;
-    overwrite-per-batch has the same at-least-once caveat as
-    :func:`stream_sketch_ingest`."""
-    import shutil
+    is co-located.
 
+    A micro-batch replayed from the same checkpoint lands once per
+    output (module docstring, *Store maintenance*)."""
     from seafan_spark.cdc import latest_state
 
-    own_ckpt = checkpoint_dir is None
-    ckpt = checkpoint_dir or tempfile.mkdtemp(prefix="seafan_upsert_ckpt_")
     keys = list(key_cols)
 
-    def ingest(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
+    def step(batch_df: DataFrame, store: DataFrame | None) -> list[_Write]:
         # compact the batch KEEPING deletes as flagged rows (latest_state
         # would drop them; the store needs the tombstone + its ts)
         flagged = batch_df.withColumn(
@@ -685,49 +718,27 @@ def stream_upsert_ingest(
         if op_col:
             flagged = flagged.drop(op_col)
         top = latest_state(flagged, keys, ts_col)
-        from pyspark.errors import AnalysisException
-
-        try:
-            store = spark.read.parquet(store_path)
-            # one full-outer join per batch; arriving change wins iff its
-            # event time >= the stored row's (late old changes lose)
-            s = store.alias("s")
-            c = top.alias("c")
-            payload = [col for col in store.columns if col not in keys]
-            take_change = F.col(f"c.{ts_col}").isNotNull() & (
-                F.col(f"s.{ts_col}").isNull()
-                | (F.col(f"c.{ts_col}") >= F.col(f"s.{ts_col}"))
-            )
-            merged = s.join(c, keys, "full_outer").select(
-                *keys,
-                *[
-                    F.when(take_change, F.col(f"c.{col}"))
-                    .otherwise(F.col(f"s.{col}"))
-                    .alias(col)
-                    for col in payload
-                ],
-            )
-        except AnalysisException as ex:
-            if "PATH_NOT_FOUND" not in str(ex):
-                raise
-            merged = top
-        merged = merged.localCheckpoint(eager=True)
-        merged.write.mode("overwrite").parquet(store_path)
-
-    try:
-        q = (
-            stream_changes.writeStream.foreachBatch(ingest)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        if store is None:
+            return [_Write(store_path, top)]
+        # one full-outer join per batch; arriving change wins iff its
+        # event time >= the stored row's (late old changes lose)
+        payload = [col for col in store.columns if col not in keys]
+        take_change = F.col(f"c.{ts_col}").isNotNull() & (
+            F.col(f"s.{ts_col}").isNull()
+            | (F.col(f"c.{ts_col}") >= F.col(f"s.{ts_col}"))
         )
-        q.awaitTermination(timeout_sec)
-        if q.isActive:
-            q.stop()
-            raise TimeoutError(f"upsert ingest did not finish in {timeout_sec}s")
-    finally:
-        if own_ckpt:
-            shutil.rmtree(ckpt, ignore_errors=True)
+        merged = store.alias("s").join(top.alias("c"), keys, "full_outer").select(
+            *keys,
+            *[
+                F.when(take_change, F.col(f"c.{col}"))
+                .otherwise(F.col(f"s.{col}"))
+                .alias(col)
+                for col in payload
+            ],
+        )
+        return [_Write(store_path, merged)]
+
+    _ingest(stream_changes, "upsert ingest", store_path, step, checkpoint_dir, timeout_sec)
 
 
 def upsert_store_state(spark: SparkSession, store_path: str) -> DataFrame:
@@ -779,51 +790,23 @@ def stream_line_counts_ingest(
     future batch is one filter over this table, never a corpus rescan.
 
     State shape: a queryable TABLE of (md5 line hash, count) —
-    vocabulary-of-lines sized, not corpus sized; same overwrite/
-    idempotency caveats as :func:`stream_sketch_ingest`."""
-    import shutil
+    vocabulary-of-lines sized, not corpus sized.
 
-    own_ckpt = checkpoint_dir is None
-    ckpt = checkpoint_dir or tempfile.mkdtemp(prefix="seafan_lines_ckpt_")
+    A micro-batch replayed from the same checkpoint lands once per
+    output (module docstring, *Store maintenance*)."""
 
-    def ingest(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
+    def step(batch_df: DataFrame, store: DataFrame | None) -> list[_Write]:
         parts = F.split(F.col(text_col), "\\Q" + sep + "\\E", -1)
-        batch_counts = (
+        merged = (
             batch_df.select(F.explode(parts).alias("_line"))
             .groupBy(F.md5(F.col("_line")).alias("_lh"))
             .agg(F.count(F.lit(1)).alias("c"))
         )
-        from pyspark.errors import AnalysisException
+        if store is not None:
+            merged = store.unionByName(merged).groupBy("_lh").agg(F.sum("c").alias("c"))
+        return [_Write(store_path, merged)]
 
-        try:
-            store = spark.read.parquet(store_path)
-            merged = (
-                store.unionByName(batch_counts)
-                .groupBy("_lh")
-                .agg(F.sum("c").alias("c"))
-            )
-        except AnalysisException as ex:
-            if "PATH_NOT_FOUND" not in str(ex):
-                raise
-            merged = batch_counts
-        merged = merged.localCheckpoint(eager=True)
-        merged.write.mode("overwrite").parquet(store_path)
-
-    try:
-        q = (
-            stream_df.writeStream.foreachBatch(ingest)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(timeout_sec)
-        if q.isActive:
-            q.stop()
-            raise TimeoutError(f"line-count ingest did not finish in {timeout_sec}s")
-    finally:
-        if own_ckpt:
-            shutil.rmtree(ckpt, ignore_errors=True)
+    _ingest(stream_df, "line-count ingest", store_path, step, checkpoint_dir, timeout_sec)
 
 
 def stream_seasonal_ingest(
@@ -844,26 +827,19 @@ def stream_seasonal_ingest(
     scoring a new window against history is one broadcast join of
     ``temporal.profile_from_moments(store)``.
 
-    Same state shape and overwrite/idempotency caveats as
-    :func:`stream_sketch_ingest` (a |keys| x cells TABLE, kilobytes
-    per key)."""
-    import shutil
+    State shape: a |keys| x cells TABLE, kilobytes per key.
 
+    A micro-batch replayed from the same checkpoint lands once per
+    output (module docstring, *Store maintenance*)."""
     from seafan_spark.temporal import seasonal_moments
 
-    own_ckpt = checkpoint_dir is None
-    ckpt = checkpoint_dir or tempfile.mkdtemp(prefix="seafan_seasonal_ckpt_")
     key_list = list(keys)
 
-    def ingest(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        batch_m = seasonal_moments(batch_df, key_list, ts_col, value_col, bucket)
-        from pyspark.errors import AnalysisException
-
-        try:
-            store = spark.read.parquet(store_path)
+    def step(batch_df: DataFrame, store: DataFrame | None) -> list[_Write]:
+        merged = seasonal_moments(batch_df, key_list, ts_col, value_col, bucket)
+        if store is not None:
             merged = (
-                store.unionByName(batch_m)
+                store.unionByName(merged)
                 .groupBy(*key_list, "bucket")
                 .agg(
                     F.sum("n").alias("n"),
@@ -871,27 +847,9 @@ def stream_seasonal_ingest(
                     F.sum("s2").alias("s2"),
                 )
             )
-        except AnalysisException as ex:
-            if "PATH_NOT_FOUND" not in str(ex):
-                raise
-            merged = batch_m
-        merged = merged.localCheckpoint(eager=True)
-        merged.write.mode("overwrite").parquet(store_path)
+        return [_Write(store_path, merged)]
 
-    try:
-        q = (
-            stream_df.writeStream.foreachBatch(ingest)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(timeout_sec)
-        if q.isActive:
-            q.stop()
-            raise TimeoutError(f"seasonal ingest did not finish in {timeout_sec}s")
-    finally:
-        if own_ckpt:
-            shutil.rmtree(ckpt, ignore_errors=True)
+    _ingest(stream_df, "seasonal ingest", store_path, step, checkpoint_dir, timeout_sec)
 
 
 def stream_cms_ingest(
@@ -915,51 +873,22 @@ def stream_cms_ingest(
     without rescanning history. depth/width/portable must match across
     the store's lifetime (cells from different geometries don't merge).
 
-    Same state shape and overwrite/idempotency caveats as
-    :func:`stream_sketch_ingest`: state is a
-    <= groups x depth x width cell TABLE, never a streaming state
-    store."""
-    import shutil
+    State shape: a <= groups x depth x width cell TABLE, never a
+    streaming state store.
 
-    from seafan_spark.session import unpersist_checkpoint
+    A micro-batch replayed from the same checkpoint lands once per
+    output (module docstring, *Store maintenance*)."""
     from seafan_spark.sketches import cms_build, cms_merge
 
-    own_ckpt = checkpoint_dir is None
-    ckpt = checkpoint_dir or tempfile.mkdtemp(prefix="seafan_cms_ckpt_")
     key_list = list(keys)
 
-    def ingest(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        batch_cells = cms_build(
+    def step(batch_df: DataFrame, store: DataFrame | None) -> list[_Write]:
+        merged = cms_build(
             batch_df, item_col, keys=key_list,
             depth=depth, width=width, portable=portable,
         )
-        from pyspark.errors import AnalysisException
+        if store is not None:
+            merged = cms_merge(store, merged, keys=key_list)
+        return [_Write(store_path, merged)]
 
-        try:
-            store = spark.read.parquet(store_path)
-            merged = cms_merge(store, batch_cells, keys=key_list)
-        except AnalysisException as ex:
-            if "PATH_NOT_FOUND" not in str(ex):
-                raise
-            merged = batch_cells
-        # materialize BEFORE the overwrite (the plan reads the same path),
-        # then free the scratch blocks once the write lands
-        merged = merged.localCheckpoint(eager=True)
-        merged.write.mode("overwrite").parquet(store_path)
-        unpersist_checkpoint(merged)
-
-    try:
-        q = (
-            stream_df.writeStream.foreachBatch(ingest)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(timeout_sec)
-        if q.isActive:
-            q.stop()
-            raise TimeoutError(f"cms ingest did not finish in {timeout_sec}s")
-    finally:
-        if own_ckpt:
-            shutil.rmtree(ckpt, ignore_errors=True)
+    _ingest(stream_df, "cms ingest", store_path, step, checkpoint_dir, timeout_sec)
