@@ -11,7 +11,6 @@ each function returns the numbers the plots are drawn from.
 
 from __future__ import annotations
 
-import math
 from dataclasses import dataclass
 from typing import Any, Sequence
 
@@ -34,6 +33,7 @@ def ks(pipe: Pipeline, fit: str, obs: str, bins: int = 1000) -> float:
     pass and the CDF difference is maximized over bin edges — resolution
     1/bins of the score range, no per-class sort, scales to any row count.
     """
+    # not routed through ks_by(keys=()): that measured 2x slower (0.53 vs 0.26 s wall)
     # rows with NULL scores are excluded entirely: greatest/least and the
     # bin floor would otherwise silently bucket them into the top bin
     # while the denominators still counted them, biasing both CDFs
@@ -130,37 +130,25 @@ def seg_table(
     each segment reports mean_obs ± 2·SE and mean_fit - bias; MAD is the
     mean |corrected fit - obs| over kept segments.
 
-    One groupBy pass over segments (the reference iterates slices,
-    re-copying rows per segment)."""
-    g = pipe.df.agg(F.avg(fit).alias("mf"), F.avg(obs).alias("mo")).collect()[0]
-    bias = g["mf"] - g["mo"]
-    rows = (
-        pipe.df.groupBy(seg)
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.avg(obs).alias("mean_obs"),
-            F.stddev_samp(obs).alias("std_obs"),
-            F.avg(fit).alias("mean_fit"),
+    The collected form of :func:`seg_table_df` (the reference iterates
+    slices, re-copying rows per segment)."""
+    rows = _seg_frame(pipe, obs, fit, seg, min_cnt).orderBy(seg).collect()
+    if rows:
+        bias = rows[0]["_bias"]
+    else:  # no segment reaches min_cnt: the bias still describes the fit
+        bias = pipe.df.agg(F.avg(fit) - F.avg(obs)).collect()[0][0]
+    out = [
+        SegRow(
+            value=r[seg],
+            n=r["n"],
+            mean_obs=r["mean_obs"],
+            obs_se=r["obs_se"],
+            mean_fit_corrected=r["mean_fit_corrected"],
         )
-        .filter(F.col("n") >= min_cnt)
-        .orderBy(seg)
-        .collect()
-    )
-    out, mad, tot = [], 0.0, 0
-    for r in rows:
-        fit_c = r["mean_fit"] - bias
-        mad += abs(fit_c - r["mean_obs"])
-        tot += 1
-        out.append(
-            SegRow(
-                value=r[seg],
-                n=r["n"],
-                mean_obs=r["mean_obs"],
-                obs_se=(r["std_obs"] or 0.0) / math.sqrt(r["n"]),
-                mean_fit_corrected=fit_c,
-            )
-        )
-    return SegResult(rows=out, bias=bias, mad=mad / tot if tot else float("nan"))
+        for r in rows
+    ]
+    mad = sum(abs(r.mean_fit_corrected - r.mean_obs) for r in out)
+    return SegResult(rows=out, bias=bias, mad=mad / len(out) if out else float("nan"))
 
 
 @dataclass
@@ -173,34 +161,21 @@ class AssessResult:
 
 def assess(pipe: Pipeline, fit: str, obs: str, cutoff: float) -> AssessResult:
     """Precision/recall/accuracy at a cutoff (Assess, diags.go:476-529):
-    predicted-yes = fit > cutoff, observed-yes = obs > 0.999."""
-    pred = F.col(fit) > F.lit(cutoff)
-    oy = F.col(obs) > F.lit(0.999)
-    r = pipe.df.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum((pred & oy).cast("long")).alias("tp"),
-        F.sum((~pred & ~oy).cast("long")).alias("tn"),
-        F.sum(oy.cast("long")).alias("obs_tot"),
-        F.sum(pred.cast("long")).alias("pred_tot"),
-    ).collect()[0]
+    predicted-yes = fit > cutoff, observed-yes = obs > 0.999. The
+    collected form of :func:`assess_r2_df`; precision is NaN when no row
+    is predicted yes."""
+    r = _assess_r2_frame(pipe, fit, obs, cutoff).collect()[0]
     if r["obs_tot"] == 0:
         raise ValueError("assess: no positive outcomes")
     if r["obs_tot"] == r["n"]:
         raise ValueError("assess: no negative outcomes")
-    precision = r["tp"] / r["pred_tot"] if r["pred_tot"] else float("nan")
     return AssessResult(
-        n=r["n"],
-        precision=precision,
-        recall=r["tp"] / r["obs_tot"],
-        accuracy=(r["tp"] + r["tn"]) / r["n"],
+        n=r["n"], precision=r["precision"], recall=r["recall"], accuracy=r["accuracy"]
     )
 
 
-def seg_table_df(pipe: Pipeline, obs: str, fit: str, seg: str, min_cnt: int = 100):
-    """Lazy DataFrame form of :func:`seg_table`: per-segment mean observed
-    vs bias-corrected mean fitted ± 2·SE. The global bias (mean fit − mean
-    obs) is a 1-row aggregate cross-joined in (broadcast — no second scan
-    collected driver-side)."""
+def _seg_frame(pipe: Pipeline, obs: str, fit: str, seg: str, min_cnt: int) -> DataFrame:
+    """:func:`seg_table_df` plus the global bias as ``_bias``."""
     bias_row = pipe.df.agg(
         (F.avg(fit) - F.avg(obs)).alias("_bias"),
     )
@@ -220,13 +195,26 @@ def seg_table_df(pipe: Pipeline, obs: str, fit: str, seg: str, min_cnt: int = 10
         F.col("mean_obs"),
         (F.coalesce(F.col("std_obs"), F.lit(0.0)) / F.sqrt(F.col("n"))).alias("obs_se"),
         (F.col("mean_fit") - F.col("_bias")).alias("mean_fit_corrected"),
+        F.col("_bias"),
     )
 
 
-def assess_r2_df(pipe: Pipeline, fit: str, obs: str, cutoff: float):
-    """Assess + R2 fused into ONE lazy aggregation pass (one scan, one-row
-    DataFrame, nothing collected driver-side). ``assess``/``r2`` stay as
-    eager scalar APIs; query paths should prefer this."""
+def seg_table_df(pipe: Pipeline, obs: str, fit: str, seg: str, min_cnt: int = 100):
+    """Lazy DataFrame form of :func:`seg_table`: per-segment mean observed
+    vs bias-corrected mean fitted ± 2·SE. The global bias (mean fit − mean
+    obs) is a 1-row aggregate cross-joined in (broadcast — no second scan
+    collected driver-side)."""
+    return _seg_frame(pipe, obs, fit, seg, min_cnt).drop("_bias")
+
+
+def _ratio(num: Column, den: Column) -> Column:
+    """``num / den`` as a double, NaN when ``den`` is 0 (a bare division
+    aborts the query under the default ANSI mode)."""
+    return F.when(den == 0, F.lit(float("nan"))).otherwise(num.cast("double") / den)
+
+
+def _assess_r2_frame(pipe: Pipeline, fit: str, obs: str, cutoff: float) -> DataFrame:
+    """:func:`assess_r2_df` plus the raw ``obs_tot`` count."""
     pred = F.col(fit) > F.lit(cutoff)
     oy = F.col(obs) > F.lit(0.999)
     s = pipe.df.agg(
@@ -240,25 +228,29 @@ def assess_r2_df(pipe: Pipeline, fit: str, obs: str, cutoff: float):
     )
     return s.select(
         F.col("n"),
-        (F.col("tp").cast("double") / F.col("pred_tot")).alias("precision"),
-        (F.col("tp").cast("double") / F.col("obs_tot")).alias("recall"),
-        ((F.col("tp") + F.col("tn")).cast("double") / F.col("n")).alias("accuracy"),
+        _ratio(F.col("tp"), F.col("pred_tot")).alias("precision"),
+        _ratio(F.col("tp"), F.col("obs_tot")).alias("recall"),
+        _ratio(F.col("tp") + F.col("tn"), F.col("n")).alias("accuracy"),
         (
             F.lit(100.0)
-            * (F.lit(1.0) - F.col("sse") / ((F.col("n") - 1) * F.col("vy")))
+            * (F.lit(1.0) - _ratio(F.col("sse"), (F.col("n") - 1) * F.col("vy")))
         ).alias("r2"),
+        F.col("obs_tot"),
     )
 
 
+def assess_r2_df(pipe: Pipeline, fit: str, obs: str, cutoff: float):
+    """Assess + R2 fused into ONE lazy aggregation pass (one scan, one-row
+    DataFrame, nothing collected driver-side). ``assess``/``r2`` are its
+    collected forms. A zero denominator (no row predicted or observed
+    positive, no rows, constant ``obs``) gives NaN, not a query error."""
+    return _assess_r2_frame(pipe, fit, obs, cutoff).drop("obs_tot")
+
+
 def r2(pipe: Pipeline, fit: str, obs: str) -> float:
-    """100 * (1 - SSE/TSS) (R2, diags.go:734-754)."""
-    r = pipe.df.agg(
-        F.sum(F.pow(F.col(obs) - F.col(fit), F.lit(2.0))).alias("sse"),
-        F.var_samp(obs).alias("vy"),
-        F.count(F.lit(1)).alias("n"),
-    ).collect()[0]
-    tss = (r["n"] - 1) * r["vy"]
-    return 100.0 * (1.0 - r["sse"] / tss)
+    """100 * (1 - SSE/TSS) (R2, diags.go:734-754); the collected form of
+    :func:`assess_r2_df` (NaN when ``obs`` is constant)."""
+    return assess_r2_df(pipe, fit, obs, THRESH).select("r2").collect()[0][0]
 
 
 def marginal(

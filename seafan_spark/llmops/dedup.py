@@ -5,9 +5,11 @@ MinHash/SimHash generate candidates by banding (equi-join on small band
 keys); n-gram Jaccard joins on shared (frequency-capped) n-grams. All
 signature math is JVM higher-order functions — no Python in the row path.
 
-Cluster assignment uses min-id label propagation over candidate edges —
-a bounded number of self-joins (connected components converge in
-O(log diameter) iterations; near-dup clusters are shallow in practice).
+Connected components over candidate edges (:func:`minhash_clusters`)
+run as a driver union-find while the edge list holds at most
+``CLUSTER_DRIVER_EDGE_CAP`` rows, and as distributed min-label
+propagation with pointer jumping above it (O(log diameter) rounds;
+near-dup clusters are shallow in practice).
 """
 
 from __future__ import annotations
@@ -289,6 +291,20 @@ def _bucket_pairs(banded: DataFrame, keys: list[str], payload: list[str]) -> Dat
     )
 
 
+def _with_est_jaccard(
+    cand: DataFrame, sig: DataFrame, num_hashes: int, broadcast: bool = False
+) -> DataFrame:
+    """``cand`` (id_a, id_b, ...) plus ``est_jaccard``: the fraction of
+    agreeing positions of both sides' signatures, joined in from the
+    (_id, _sig) table ``sig`` (broadcast when it is a small sample)."""
+    for side in ("a", "b"):
+        s = sig.select(F.col("_id").alias(f"id_{side}"), F.col("_sig").alias(f"sig_{side}"))
+        cand = cand.join(F.broadcast(s) if broadcast else s, f"id_{side}")
+    matches = F.size(F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda v: v))
+    est = matches.cast("double") / F.lit(float(num_hashes))
+    return cand.withColumn("est_jaccard", est).drop("sig_a", "sig_b")
+
+
 def minhash_pairs(
     pipe: Pipeline,
     id_col: str,
@@ -363,15 +379,8 @@ def minhash_pairs(
         .dropDuplicates(["id_a", "id_b"])
     )
     if verify == "est":
-        cand = cand.join(
-            sig.select(F.col("_id").alias("id_a"), F.col("_sig").alias("sig_a")), "id_a"
-        ).join(sig.select(F.col("_id").alias("id_b"), F.col("_sig").alias("sig_b")), "id_b")
-        matches = F.size(
-            F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda v: v)
-        )
-        est = matches.cast("double") / F.lit(float(num_hashes))
         return (
-            cand.withColumn("est_jaccard", est)
+            _with_est_jaccard(cand, sig, num_hashes)
             .filter(F.col("est_jaccard") >= threshold)
             .select("id_a", "id_b", "est_jaccard")
         )
@@ -485,19 +494,11 @@ def minhash_calibration(
             F.broadcast(sizes.select(F.col("_id").alias("id_b"), F.col("_n").alias("_nb"))),
             "id_b",
         )
-        .join(
-            F.broadcast(sig.select(F.col("_id").alias("id_a"), F.col("_sig").alias("sig_a"))),
-            "id_a",
-        )
-        .join(
-            F.broadcast(sig.select(F.col("_id").alias("id_b"), F.col("_sig").alias("sig_b"))),
-            "id_b",
-        )
     )
+    pairs = _with_est_jaccard(pairs, sig, num_hashes, broadcast=True)
     i0 = F.coalesce(F.col("_i"), F.lit(0))
     true_j = i0.cast("double") / (F.col("_na") + F.col("_nb") - i0).cast("double")
-    matches = F.size(F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda v: v))
-    est = matches.cast("double") / F.lit(float(num_hashes))
+    est = F.col("est_jaccard")
     return pairs.select(
         "id_a",
         "id_b",
@@ -571,15 +572,12 @@ def _clusters_driver(edges: DataFrame) -> DataFrame:
     return edges.sparkSession.createDataFrame(out, schema=schema)
 
 
-def minhash_clusters(
-    pairs: DataFrame, max_iter: int = 10, driver_edge_cap: int | None = None
-) -> DataFrame:
+def minhash_clusters(pairs: DataFrame, max_iter: int = 10) -> DataFrame:
     """Connected components over duplicate pairs: (id, cluster) where
     cluster is the component's min id.
 
-    Small edge lists (<= ``driver_edge_cap``, default
-    ``CLUSTER_DRIVER_EDGE_CAP``) collect to a driver union-find. Above the
-    cap: distributed min-label propagation with pointer jumping (each
+    Small edge lists (<= ``CLUSTER_DRIVER_EDGE_CAP`` rows) collect to a
+    driver union-find. Above the cap: distributed min-label propagation with pointer jumping (each
     round hooks the min over direct neighbors, then replaces every label
     by its label's label) — converges in O(log diameter) rounds, each one
     a bounded number of joins + aggregates."""
@@ -588,13 +586,11 @@ def minhash_clusters(
         # the edges checkpoint that the cleanup below unpersists — any
         # later action on it would fail on the truncated lineage
         raise ValueError("minhash_clusters: max_iter must be >= 1")
-    if driver_edge_cap is None:
-        driver_edge_cap = CLUSTER_DRIVER_EDGE_CAP
     # materialize the candidate edges once — label propagation re-reads
     # them every iteration, and recomputing the upstream signature join
     # per iteration would dominate the whole computation
     edges = pairs.select("id_a", "id_b").localCheckpoint(eager=True)
-    if edges.count() <= driver_edge_cap:
+    if edges.count() <= CLUSTER_DRIVER_EDGE_CAP:
         out = _clusters_driver(edges)
         unpersist_checkpoint(edges)  # result is driver rows; edges is scratch
         return out
@@ -836,6 +832,26 @@ def contamination_check(
     contaminated (corpus doc, benchmark doc) pair with the overlap
     count.
     """
+    return _contamination(
+        corpus, benchmark, id_col, text_col, bench_id, bench_text, n, min_shared
+    )
+
+
+def _contamination(
+    corpus,
+    benchmark,
+    id_col: str,
+    text_col: str,
+    bench_id: str,
+    bench_text: str,
+    n: int,
+    min_shared: int,
+    bloom: tuple[int, int] | None = None,
+) -> DataFrame:
+    """The contamination screen behind :func:`contamination_check`; with
+    ``bloom=(num_hashes, bits_per_item)`` the corpus gram stream is first
+    cut by a Bloom filter of the benchmark grams
+    (:func:`contamination_check_bloom`)."""
     c = getattr(corpus, "df", corpus)
     b = getattr(benchmark, "df", benchmark)
     cg = c.select(
@@ -846,6 +862,17 @@ def contamination_check(
         F.col(bench_id).alias("_bid"),
         F.explode(word_ngrams_col(F.col(bench_text), n)).alias("_g"),
     ).distinct()
+    if bloom is not None:
+        num_hashes, bits_per_item = bloom
+        words, nbits = gram_bloom_filter(
+            bg, "_g", num_hashes=num_hashes, bits_per_item=bits_per_item
+        )
+        bfdf = c.sparkSession.createDataFrame([(words,)], schema="_bf: array<long>")
+        cg = (
+            cg.crossJoin(F.broadcast(bfdf))
+            .filter(bloom_might_contain(F.col("_bf"), nbits, F.col("_g"), num_hashes))
+            .drop("_bf")
+        )
     hits = (
         cg.join(F.broadcast(bg), "_g")
         .groupBy("_cid", "_bid")
@@ -957,39 +984,39 @@ def contamination_check_bloom(
     too big to broadcast as a join table at all, this is the difference
     between a full corpus shuffle and none.
     """
-    c = getattr(corpus, "df", corpus)
-    b = getattr(benchmark, "df", benchmark)
-    bg = b.select(
-        F.col(bench_id).alias("_bid"),
-        F.explode(word_ngrams_col(F.col(bench_text), n)).alias("_g"),
-    ).distinct()
-    words, nbits = gram_bloom_filter(
-        bg, "_g", num_hashes=num_hashes, bits_per_item=bits_per_item
+    return _contamination(
+        corpus, benchmark, id_col, text_col, bench_id, bench_text, n, min_shared,
+        bloom=(num_hashes, bits_per_item),
     )
-    spark = c.sparkSession
-    bfdf = spark.createDataFrame(
-        [(words,)], schema="_bf: array<long>"
-    )
-    cg = (
-        c.select(
-            F.col(id_col).alias("_cid"),
-            F.explode(word_ngrams_col(F.col(text_col), n)).alias("_g"),
-        )
-        .crossJoin(F.broadcast(bfdf))
-        .filter(bloom_might_contain(F.col("_bf"), nbits, F.col("_g"), num_hashes))
-        .drop("_bf")
-    )
-    hits = (
-        cg.join(F.broadcast(bg), "_g")
-        .groupBy("_cid", "_bid")
-        .agg(F.count_distinct("_g").alias("shared_ngrams"))
-        .filter(F.col("shared_ngrams") >= min_shared)
-    )
-    return hits.select(
-        F.col("_cid").alias(id_col),
-        F.col("_bid").alias(bench_id),
-        F.col("shared_ngrams").cast("bigint").alias("shared_ngrams"),
-    )
+
+
+def _capped_grams(
+    pipe: Pipeline, id_col: str, text_col: str, n: int, max_df: int
+) -> DataFrame:
+    """(g, _id, count) rows: each document's word ``n``-grams with the
+    gram's document frequency ``count``, keeping only grams seen in at
+    most ``max_df`` docs — the one vocabulary both n-gram candidate
+    stages work over.
+
+    Tokenization is the CPU-heavy stage, so the doc rows are spread first
+    if the source arrived under-partitioned (a single small parquet file
+    reads as one partition). The EXPLODED (id, gram) table is then
+    localCheckpointed: it feeds the df aggregate and every downstream
+    branch, so tokenization runs once and nothing re-serializes large
+    arrays. localCheckpoint (not persist): blocks live in executor storage
+    and are auto-released when the DataFrame is dereferenced, so repeated
+    calls in a long-lived session don't accumulate cached plans in the
+    session CacheManager."""
+    from seafan_spark.partitions import spread_if_narrow
+
+    raw = pipe.df.select(F.col(id_col).alias("_id"), F.col(text_col).alias("_txt"))
+    target = pipe.df.sparkSession.sparkContext.defaultParallelism
+    raw = spread_if_narrow(raw, target, "_id")
+    ex = raw.select(
+        "_id", F.explode(word_ngrams_col(F.col("_txt"), n)).alias("g")
+    ).localCheckpoint(eager=True)
+    dfreq = ex.groupBy("g").count().filter(F.col("count") <= max_df)
+    return ex.join(F.broadcast(dfreq), "g")
 
 
 def _ngram_pair_stats(
@@ -1012,29 +1039,7 @@ def _ngram_pair_stats(
     quadratic stop-gram postings). Shuffles on ngram then on the pair key;
     both partial-aggregated map-side.
     """
-    # spread + materialize: tokenization is the CPU-heavy stage, so spread
-    # the doc rows first if the source arrived under-partitioned (a single
-    # small parquet file reads as one partition); then localCheckpoint the
-    # per-doc gram arrays, which feed five branches (sizes x2, the df-cap
-    # aggregate, both join sides) — without it the string splitting re-runs
-    # per branch. localCheckpoint (not persist): blocks live in executor
-    # storage and are auto-released when the DataFrame is dereferenced, so
-    # repeated calls in a long-lived session don't accumulate cached plans
-    # in the session CacheManager.
-    from seafan_spark.partitions import spread_if_narrow
-
-    raw = pipe.df.select(F.col(id_col).alias("_id"), F.col(text_col).alias("_txt"))
-    target = pipe.df.sparkSession.sparkContext.defaultParallelism
-    raw = spread_if_narrow(raw, target, "_id")
-    # checkpoint the EXPLODED (id, gram) table, not the per-doc gram arrays:
-    # it feeds the df-cap aggregate and both join sides directly, and the
-    # per-doc sizes fall out of one cheap count over the materialized rows —
-    # so tokenization runs once and nothing re-serializes large arrays.
-    ex = raw.select(
-        "_id", F.explode(word_ngrams_col(F.col("_txt"), n)).alias("g")
-    ).localCheckpoint(eager=True)
-    df_cap = ex.groupBy("g").count().filter(F.col("count") <= max_df).select("g")
-    ex = ex.join(F.broadcast(df_cap), "g")
+    ex = _capped_grams(pipe, id_col, text_col, n, max_df)
     # sizes from the SAME capped gram vocabulary as the intersections:
     # the metric is computed entirely over sub-max_df grams (stop-grams are
     # excluded from numerator AND denominator — mixing full-set sizes with
@@ -1085,20 +1090,11 @@ def _ngram_pair_stats_prefix(
     are never self-joined. Same vocabulary-cap semantics: grams with
     df > max_df are excluded from prefixes, sizes, and intersections.
     """
-    from seafan_spark.partitions import spread_if_narrow
-
-    raw = pipe.df.select(F.col(id_col).alias("_id"), F.col(text_col).alias("_txt"))
-    target = pipe.df.sparkSession.sparkContext.defaultParallelism
-    raw = spread_if_narrow(raw, target, "_id")
-    ex = raw.select(
-        "_id", F.explode(word_ngrams_col(F.col("_txt"), n)).alias("g")
-    ).localCheckpoint(eager=True)
-    dfreq = ex.groupBy("g").count().filter(F.col("count") <= max_df)
     # per-doc gram array sorted by the GLOBAL (df, gram) order — rarest
     # first, ties broken by the gram string so the order is total
-    exd = ex.join(F.broadcast(dfreq), "g")
     docs = (
-        exd.groupBy("_id")
+        _capped_grams(pipe, id_col, text_col, n, max_df)
+        .groupBy("_id")
         .agg(
             F.sort_array(
                 F.collect_list(F.struct(F.col("count").alias("_df"), F.col("g")))
@@ -1252,7 +1248,6 @@ def duplicated_spans(
     min_len: int = 50,
     gram_k: int = 20,
     min_docs: int = 2,
-    materialize_grams: bool = True,
 ) -> DataFrame:
     """Exact duplicated-substring spans — the substring-level dedup of
     Lee et al. 2022 ("Deduplicating Training Data Makes Language Models
@@ -1285,12 +1280,8 @@ def duplicated_spans(
     chars)); everything after step 1 moves only (id, pos) pairs for
     duplicated grams, and the final window partitions by doc id, state
     bounded by one doc's duplicated positions. The gram table feeds two
-    branches (dup selection + the position join); ``materialize_grams``
-    localCheckpoints it so tokenization runs once — right up to the
-    scale where materializing a corpus-sized intermediate to executor
-    storage costs more than recomputing one projection, at which point
-    pass ``False`` to trade a second gram pass for zero materialized
-    state.
+    branches (dup selection + the position join), so it is
+    localCheckpointed and tokenization runs once.
     """
     d = pipe.df if isinstance(pipe, Pipeline) else pipe
     from seafan_spark.partitions import spread_if_narrow
@@ -1313,9 +1304,8 @@ def duplicated_spans(
             F.col("pos").cast("bigint").alias("pos"),
             F.xxhash64(F.expr(f"substring(_txt, pos, {gram_k})")).alias("h"),
         )
+        .localCheckpoint(eager=True)
     )
-    if materialize_grams:
-        grams = grams.localCheckpoint(eager=True)
     dup = (
         grams.groupBy("h")
         .agg(F.count_distinct("_id").alias("_docs"))
@@ -1505,13 +1495,7 @@ def embedding_neardup_pairs(
     per-pair work is a single dot product — 3x less array math than
     cosine(a, b) per candidate, and the normalization runs n times
     instead of O(candidate-pairs) times."""
-    from seafan_spark.llmops.similarity import (
-        dot_col,
-        infer_vec_dim,
-        norm_col,
-        probe_buckets_col,
-        with_hyperplane_bucket,
-    )
+    from seafan_spark.llmops.similarity import dot_col, infer_vec_dim, probe_buckets_col
 
     raw = pipe.df.select(
         F.col(id_col).alias("_id"), F.col(vec_col).alias("_raw")
@@ -1523,19 +1507,7 @@ def embedding_neardup_pairs(
         )
     if dim is None:
         dim = infer_vec_dim(raw, "_raw", "embedding_neardup_pairs")
-    staged = raw.select(
-        "_id",
-        "_raw",
-        norm_col(F.col("_raw")).alias("_n"),  # staged: computed once per row
-    )
-    # zero-norm guard mirrors _exact_pairs_blocked's unit_rows (norm 0 ->
-    # divide by 1): a bare division would abort under default ANSI mode
-    safe_n = F.when(F.col("_n") == 0.0, F.lit(1.0)).otherwise(F.col("_n"))
-    d = with_hyperplane_bucket(staged, "_raw", "_bkt", dim, planes, seed).select(
-        "_id",
-        F.transform(F.col("_raw"), lambda x: x.cast("double") / safe_n).alias("_v"),
-        "_bkt",
-    )
+    d = embedding_store_prepare(pipe.df, id_col, vec_col, dim, planes, seed)
     a = d.select(F.col("_id").alias("id_a"), F.col("_v").alias("va"), "_bkt")
     if probe_bits > 0:
         a = a.select(
@@ -1786,13 +1758,8 @@ def minhash_pairs_incremental(
         )
         .dropDuplicates(["id_a", "id_b"])
     )
-    cand = cand.join(
-        all_sig.select(F.col("_id").alias("id_a"), F.col("_sig").alias("sig_a")), "id_a"
-    ).join(all_sig.select(F.col("_id").alias("id_b"), F.col("_sig").alias("sig_b")), "id_b")
-    matches = F.size(F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda v: v))
-    est = matches.cast("double") / F.lit(float(num_hashes))
     return (
-        cand.withColumn("est_jaccard", est)
+        _with_est_jaccard(cand, all_sig, num_hashes)
         .filter(F.col("est_jaccard") >= threshold)
         .select("id_a", "id_b", "est_jaccard")
     )
@@ -1855,6 +1822,9 @@ def embedding_store_prepare(
     from seafan_spark.llmops.similarity import norm_col, with_hyperplane_bucket
 
     raw = df.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_raw"))
+    # the norm is staged (computed once per row); a zero norm divides by 1
+    # like _exact_pairs_blocked's unit_rows — a bare division would abort
+    # under the default ANSI mode
     staged = raw.select("_id", "_raw", norm_col(F.col("_raw")).alias("_n"))
     safe_n = F.when(F.col("_n") == 0.0, F.lit(1.0)).otherwise(F.col("_n"))
     return with_hyperplane_bucket(staged, "_raw", "_bkt", dim, planes, seed).select(
@@ -1933,8 +1903,10 @@ def embedding_neardup_incremental(
 
 def _assign_to_centroids(unit: DataFrame, cents: DataFrame) -> DataFrame:
     """Assign every (_id, _v) row to its max-cosine centroid from the
-    (_cell, _cv) table, min-cell tiebreak — deterministic and
-    SQL-replayable. Returns (_id, _v, _cell).
+    unit-norm (_cell, _cv) table, min-cell tiebreak — deterministic and
+    SQL-replayable. The SemDeDup family's one assignment rule: store
+    rows, incremental batches and the silhouette audit all go through
+    it. Returns (_id, _v, _cell).
 
     Round-10 shape: the old form crossJoined the broadcast k-row table
     (k-fold row blowup) and ranked per _id with a window — a full
@@ -2000,6 +1972,25 @@ def adaptive_n_clusters(n_rows: int, lo: int = 16, hi: int = 65536) -> int:
     return max(lo, min(hi, int(math.isqrt(max(n_rows, 1)))))
 
 
+def _unit_vectors(
+    df: DataFrame, id_col: str, vec_col: str, dim: int | None, where: str
+) -> DataFrame:
+    """(_id, _v) rows with ``_v`` the unit-L2-normalized vector — a vector
+    whose length is not ``dim`` (inferred from the first row when None,
+    an eager job) fails the query instead of folding into a NULL dot."""
+    from seafan_spark.llmops.similarity import (
+        checked_vec_col,
+        infer_vec_dim,
+        l2_normalize_col,
+    )
+
+    raw = df.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_raw"))
+    if dim is None:
+        dim = infer_vec_dim(raw, "_raw", where)
+    vec = checked_vec_col(F.col("_raw"), dim, where)
+    return raw.select("_id", l2_normalize_col(vec).alias("_v"))
+
+
 def _semantic_assign(
     df: DataFrame,
     id_col: str,
@@ -2013,63 +2004,92 @@ def _semantic_assign(
     """Shared quantization stage for the SemDeDup family: unit-normalize,
     pick centroids (seeds = k lowest-id vectors, deterministic and
     SQL-replayable; kmeans = distributed MLlib, the scale path), assign
-    every row. Returns (assigned (_id, _v, _cell) localCheckpointed,
-    centroid table (_cell, _cv)) — the centroid table is what an
-    incremental pass persists so later batches quantize identically."""
-    from seafan_spark.llmops.similarity import (
-        checked_vec_col,
-        infer_vec_dim,
-        l2_normalize_col,
-    )
+    every row with :func:`_assign_to_centroids`. Returns (assigned
+    (_id, _v, _cell), centroid table (_cell, _cv)).
 
+    The centroid table (k rows) is always unit-norm: MLlib's Euclidean
+    centres of unit vectors are shorter than 1, so they are normalized
+    before they are stored. Then the max-cosine rule gives each row its
+    nearest centre, and a later batch assigned against the persisted
+    table (incremental SemDeDup) or the silhouette audit sees exactly
+    the cells the store got."""
     if centroids not in ("kmeans", "seeds"):
         raise ValueError(f"semantic_dedup: unknown centroids mode {centroids!r}")
-    raw = df.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_raw"))
-    if dim is None:
-        dim = infer_vec_dim(raw, "_raw", "semantic_dedup")
-    vec = checked_vec_col(F.col("_raw"), dim, "semantic_dedup")
-    unit = raw.select("_id", l2_normalize_col(vec).alias("_v"))
+    unit = _unit_vectors(df, id_col, vec_col, dim, "semantic_dedup")
     if n_clusters is None:
         # adaptive default (round-7 VERDICT #1b): k ≈ √N from one cheap
         # count, so calling with defaults never hits the O(N²/k)
         # quadratic term a fixed small k develops at scale
         n_clusters = adaptive_n_clusters(unit.count())
-
     if centroids == "seeds":
-        # the k lowest-id unit vectors are the centers; every row joins the
-        # broadcast k-row seed table and keeps its max-cosine seed
-        # (min-seed-id tiebreak) — deterministic, no training job
+        # the k lowest-id unit vectors are the centres — deterministic, no
+        # training job. Checkpointed, not rebuilt with createDataFrame: that
+        # table measured ~0.3 s slower per call (local[4], 8 x 64-d seeds)
         cents = (
             unit.orderBy("_id")
             .limit(n_clusters)
             .select(F.col("_id").alias("_cell"), F.col("_v").alias("_cv"))
             .localCheckpoint(eager=True)
         )
-        assigned = _assign_to_centroids(unit, cents)
     else:
+        import numpy as np
         from pyspark.ml.clustering import KMeans
         from pyspark.ml.functions import array_to_vector
 
-        ml = unit.withColumn("_mlv", array_to_vector(F.col("_v")))
-        km = KMeans(
-            k=n_clusters, seed=seed, maxIter=max_iter,
-            featuresCol="_mlv", predictionCol="_cell",
-        )
-        model = km.fit(ml)
-        assigned = model.transform(ml).select("_id", "_v", "_cell")
-        spark = df.sparkSession
-        cents = spark.createDataFrame(
-            [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())],
+        km = KMeans(k=n_clusters, seed=seed, maxIter=max_iter, featuresCol="_mlv")
+        model = km.fit(unit.select(array_to_vector(F.col("_v")).alias("_mlv")))
+        cents = df.sparkSession.createDataFrame(
+            [
+                (i, [float(x) for x in c / (np.linalg.norm(c) or 1.0)])
+                for i, c in enumerate(model.clusterCenters())
+            ],
             "_cell long, _cv array<double>",
         )
-    # lazy persist (round-10): the assignment feeds both self-join sides
-    # and the final output — without storage the quantizer (or the k-row
-    # argmax) would re-run three times, and the kmeans path would
-    # re-transform per branch. persist instead of the old eager
-    # localCheckpoint: every consumer lives inside the caller's final
-    # action(s), so the first stage to need the assignment computes and
-    # caches it — no build-time materialization job.
-    return assigned.localCheckpoint(eager=False), cents
+    # lazy local checkpoint: the assignment feeds both self-join sides and
+    # the final output, so the first stage of the caller's action to need
+    # it computes and stores it — no build-time materialization job
+    return _assign_to_centroids(unit, cents).localCheckpoint(eager=False), cents
+
+
+def _semantic_judge(
+    assigned: DataFrame, eps: float, store: DataFrame | None = None
+) -> DataFrame:
+    """The SemDeDup keep-first verdict for (_id, _v, _cell) rows: a row is
+    dropped iff a same-cell row of ``assigned`` with a smaller id, or any
+    same-cell ``store`` row, has cosine >= ``eps``. Store rows witness
+    whatever their own ``_keep`` — the one-shot rule lets a dropped row
+    drop a later near-identical one. Returns store-schema rows
+    (_id, _v, _cell, _keep) for ``assigned``.
+
+    Blocking is the cell alone: one shuffle on _cell per join side, per
+    pair one JVM dot product over unit vectors (cosine == dot); the
+    dropped set is a slim distinct (id) joined back to the rows."""
+    from seafan_spark.llmops.similarity import dot_col
+
+    def side(d: DataFrame, s: str) -> DataFrame:
+        return d.select(F.col("_id").alias(f"id_{s}"), F.col("_v").alias(f"v{s}"), "_cell")
+
+    new = side(assigned, "b")
+    close = dot_col(F.col("va"), F.col("vb")) >= F.lit(float(eps))
+    dropped = (
+        side(assigned, "a").join(new, "_cell")
+        .filter((F.col("id_a") < F.col("id_b")) & close)
+        .select("id_b")
+    )
+    if store is not None:
+        dropped = dropped.union(
+            side(store, "a").join(new, "_cell").filter(close).select("id_b")
+        )
+    # distinct on _id ALONE, then the flag: a join key known distinct lets
+    # the optimizer drop this outer join wherever only (_id, _v, _cell)
+    # are read — as the incremental path reads the store
+    dropped = dropped.select(F.col("id_b").alias("_id")).distinct()
+    return assigned.join(dropped.withColumn("_dup", F.lit(1)), "_id", "left").select(
+        "_id",
+        "_v",
+        "_cell",
+        F.when(F.col("_dup").isNull(), F.lit(1)).otherwise(F.lit(0)).alias("_keep"),
+    )
 
 
 def semantic_dedup(
@@ -2092,7 +2112,7 @@ def semantic_dedup(
     a document x is DROPPED iff some same-cluster y with a smaller id has
     cosine(x, y) >= eps — greedy keep-first in id order, the same policy
     as the stream-dedup store. Returns (id, cluster, keep 0/1) for every
-    input row.
+    input row: the projection of :func:`semantic_dedup_store_prepare`.
 
     ``centroids`` picks the coarse quantizer:
 
@@ -2100,11 +2120,14 @@ def semantic_dedup(
       data-adaptive cells like ann_ivf_topk, so cluster populations stay
       balanced and the within-cluster pairwise cost is controlled.
     - ``"seeds"`` (the oracle path): the ``n_clusters`` lowest-id vectors
-      ARE the centers, each row assigned to its max-cosine seed with
-      min-seed-id tiebreak. Fully deterministic and SQL-replayable, so
-      the DuckDB twin can hash-check assignment + pair + keep logic
+      ARE the centers. Fully deterministic and SQL-replayable, so the
+      DuckDB twin can hash-check assignment + pair + keep logic
       end-to-end; pytest proves the kmeans path agrees with a direct
       per-cluster reference on the same assignment.
+
+    Either way the centroid table is unit-norm and there is one
+    assignment rule: each row goes to its max-cosine centroid, lowest
+    cell on ties (:func:`_assign_to_centroids`).
 
     100 TB story: the cluster id is the ONLY blocking structure — the
     corpus shuffles once on cluster for the self-join, never all-pairs;
@@ -2116,32 +2139,15 @@ def semantic_dedup(
     stage stays LINEAR in N with defaults (the SemDeDup paper runs 50k
     clusters on LAION at this ratio; measured 10x exponent in
     SCALING.md). Pass an explicit k to pin the quantizer (the oracle
-    does). Seeds mode costs an extra k-row broadcast expansion per row,
-    which is why kmeans is the scale default.
+    does).
     """
-    from seafan_spark.llmops.similarity import dot_col
-
-    assigned, _ = _semantic_assign(
-        pipe.df, id_col, vec_col, n_clusters, centroids, seed, max_iter, dim
+    store, _ = semantic_dedup_store_prepare(
+        pipe, id_col, vec_col, n_clusters, eps, centroids, seed, max_iter, dim
     )
-    a = assigned.select(F.col("_id").alias("id_a"), F.col("_v").alias("va"), "_cell")
-    b = assigned.select(F.col("_id").alias("id_b"), F.col("_v").alias("vb"), "_cell")
-    # unit vectors: cosine == dot. id_a < id_b means id_b is the dropped side
-    # under keep-first, so the dropped set is just the distinct id_b values.
-    dropped = (
-        a.join(b, "_cell")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .filter(dot_col(F.col("va"), F.col("vb")) >= F.lit(float(eps)))
-        .select(F.col("id_b").alias("_id"))
-        .distinct()
-    )
-    return (
-        assigned.join(dropped.withColumn("_dup", F.lit(1)), "_id", "left")
-        .select(
-            F.col("_id").alias("id"),
-            F.col("_cell").cast("bigint").alias("cluster"),
-            F.when(F.col("_dup").isNull(), F.lit(1)).otherwise(F.lit(0)).alias("keep"),
-        )
+    return store.select(
+        F.col("_id").alias("id"),
+        F.col("_cell").cast("bigint").alias("cluster"),
+        F.col("_keep").alias("keep"),
     )
 
 
@@ -2159,10 +2165,11 @@ def semantic_dedup_store_prepare(
     """Materialize the persisted state for incremental SemDeDup: returns
     (store, centroid table). Store rows are (_id, _v unit-normalized,
     _cell, _keep) — normalization, quantization, and the keep verdict
-    happen ONCE at ingestion and are never recomputed; the centroid
-    table (_cell, _cv) freezes the quantizer so every later batch is
-    assigned identically (the semantic analogue of persisting minhash
-    signatures + their mixer scheme).
+    happen ONCE at ingestion and are never recomputed; the unit-norm
+    centroid table (_cell, _cv) freezes the quantizer so every later
+    batch is assigned by the same max-cosine rule to the same cells (the
+    semantic analogue of persisting minhash signatures + their mixer
+    scheme).
 
     Dropped rows stay in the store with _keep=0: the one-shot keep rule
     lets a dropped row witness-drop a later near-identical arrival, so
@@ -2171,24 +2178,7 @@ def semantic_dedup_store_prepare(
     assigned, cents = _semantic_assign(
         pipe.df, id_col, vec_col, n_clusters, centroids, seed, max_iter, dim
     )
-    from seafan_spark.llmops.similarity import dot_col
-
-    a = assigned.select(F.col("_id").alias("id_a"), F.col("_v").alias("va"), "_cell")
-    b = assigned.select(F.col("_id").alias("id_b"), F.col("_v").alias("vb"), "_cell")
-    dropped = (
-        a.join(b, "_cell")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .filter(dot_col(F.col("va"), F.col("vb")) >= F.lit(float(eps)))
-        .select(F.col("id_b").alias("_id"))
-        .distinct()
-    )
-    store = assigned.join(dropped.withColumn("_dup", F.lit(1)), "_id", "left").select(
-        "_id",
-        "_v",
-        "_cell",
-        F.when(F.col("_dup").isNull(), F.lit(1)).otherwise(F.lit(0)).alias("_keep"),
-    )
-    return store, cents
+    return _semantic_judge(assigned, eps), cents
 
 
 def semantic_dedup_incremental(
@@ -2208,62 +2198,34 @@ def semantic_dedup_incremental(
     Keep policy (keep-first, same as the stream dedup store): a new row
     is dropped if ANY same-cell store row is eps-close (the store copy
     wins — it arrived first), or if a smaller-id same-cell row of this
-    batch is. When batch ids exceed all store ids (append-only id
-    discipline), store-union-result is row-identical to a one-shot
-    semantic_dedup over everything (pytest + the oracle's hash check
-    prove it) — the store's witness rows include its _keep=0 members,
-    exactly like the one-shot rule.
+    batch is. Batch rows are assigned to the stored unit-norm centroids
+    by the same max-cosine rule the store was, so an exact re-ingested
+    copy always lands in its original's cell. When batch ids exceed all
+    store ids (append-only id discipline), store-union-result is
+    row-identical to a one-shot semantic_dedup over everything (pytest +
+    the oracle's hash check prove it) — the store's witness rows include
+    its _keep=0 members, exactly like the one-shot rule.
 
-    Scale shape: the centroid table broadcasts; the batch shuffles once
-    on _cell against the store's (co-located when the store is written
-    bucketed by _cell); new-vs-new is the same join on the small batch.
-    Returns store-schema rows (_id, _v, _cell, _keep) for the batch —
-    append them to the store for the next round.
+    Scale shape: the centroid table rides into the plan as a literal (a
+    broadcast beyond the literal threshold); the batch shuffles once on _cell against the store's (co-located when the
+    store is written bucketed by _cell); new-vs-new is the same join on
+    the small batch. Returns store-schema rows (_id, _v, _cell, _keep) for
+    the batch — append them to the store for the next round.
     """
-    from seafan_spark.llmops.similarity import (
-        checked_vec_col,
-        dot_col,
-        infer_vec_dim,
-        l2_normalize_col,
-    )
-
     new_df = getattr(new_pipe, "df", new_pipe)
-    raw = new_df.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_raw"))
-    if dim is None:
-        dim = infer_vec_dim(raw, "_raw", "semantic_dedup_incremental")
-    vec = checked_vec_col(F.col("_raw"), dim, "semantic_dedup_incremental")
-    unit = raw.select("_id", l2_normalize_col(vec).alias("_v"))
-    assigned = _assign_to_centroids(unit, cents).localCheckpoint(eager=True)
-
-    new_side = assigned.select(
-        F.col("_id").alias("_nid"), F.col("_v").alias("_nv"), "_cell"
-    )
-    store_side = store.select(
-        F.col("_id").alias("_sid"), F.col("_v").alias("_sv"), "_cell"
-    )
-    vs_store = (
-        new_side.join(store_side, "_cell")
-        .filter(dot_col(F.col("_nv"), F.col("_sv")) >= F.lit(float(eps)))
-        .select(F.col("_nid").alias("_id"))
-    )
-    a = assigned.select(F.col("_id").alias("id_a"), F.col("_v").alias("va"), "_cell")
-    b = assigned.select(F.col("_id").alias("id_b"), F.col("_v").alias("vb"), "_cell")
-    vs_new = (
-        a.join(b, "_cell")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .filter(dot_col(F.col("va"), F.col("vb")) >= F.lit(float(eps)))
-        .select(F.col("id_b").alias("_id"))
-    )
-    dropped = vs_store.union(vs_new).distinct()
-    return assigned.join(dropped.withColumn("_dup", F.lit(1)), "_id", "left").select(
-        "_id",
-        "_v",
-        "_cell",
-        F.when(F.col("_dup").isNull(), F.lit(1)).otherwise(F.lit(0)).alias("_keep"),
-    )
+    unit = _unit_vectors(new_df, id_col, vec_col, dim, "semantic_dedup_incremental")
+    # lazy, as in _semantic_assign: the batch feeds three join sides
+    assigned = _assign_to_centroids(unit, cents).localCheckpoint(eager=False)
+    return _semantic_judge(assigned, eps, store)
 
 
 # ------------------------------------------------- line-level dedup ----
+#: common-line count up to which :func:`drop_common_lines` collects the
+#: common set into one broadcast hash-array row; above it, the left-anti
+#: join + reassembly path runs instead.
+COMMON_LINES_ARRAY_CAP = 50_000
+
+
 def drop_common_lines(
     pipe: Pipeline,
     id_col: str,
@@ -2272,7 +2234,6 @@ def drop_common_lines(
     min_count: int | None = None,
     min_ratio: float | None = None,
     distinct_docs: bool = False,
-    array_cap: int = 50_000,
 ) -> Pipeline:
     """CCNet-style line/paragraph-level global dedup (boilerplate removal).
 
@@ -2295,7 +2256,7 @@ def drop_common_lines(
     relation for the count aggregation (map-side partial agg over the
     distinct-line domain).  The common-line set is small by construction
     (at most ``total_lines/min_count`` entries): when it fits
-    ``array_cap`` it is collected as ONE md5-hash array row and
+    ``COMMON_LINES_ARRAY_CAP`` it is collected as ONE md5-hash array row and
     cross-broadcast, so documents are cleaned by a JVM higher-order
     ``filter`` without ever shuffling; above the cap, a left-anti join
     against the hash set plus one groupBy(id) reassembly shuffle.
@@ -2322,7 +2283,7 @@ def drop_common_lines(
         .localCheckpoint(eager=True)
     )
 
-    if common.count() <= array_cap:
+    if common.count() <= COMMON_LINES_ARRAY_CAP:
         bp = common.agg(F.collect_list("_lh").alias("_bp"))
         kept = F.filter(parts, lambda x: ~F.array_contains(F.col("_bp"), F.md5(x)))
         out = (

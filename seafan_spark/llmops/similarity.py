@@ -1196,7 +1196,11 @@ def cluster_silhouette(
 
     Quantization reuses the SemDeDup family's `_semantic_assign`
     (``centroids="seeds"`` = deterministic, SQL-replayable;
-    ``"kmeans"`` = the MLlib scale path; ``n_clusters=None`` → ≈√N).
+    ``"kmeans"`` = the MLlib scale path; ``n_clusters=None`` → ≈√N). Its
+    centroid table is unit-norm and each row's cell is its max-cosine
+    centroid, so a is never above b and no silhouette is negative: it
+    measures how far the nearest OTHER centroid trails the own one
+    (0 = the row sits on a cell boundary).
 
     100 TB design: NO pairwise stage and NO join — the k-row centroid
     table rides into the scan as an array-of-structs literal, per-row

@@ -52,9 +52,13 @@ def test_drop_common_lines_all_dropped_doc(spark):
     assert rows[2]["text_clean"] == "keep"
 
 
-def test_drop_common_lines_join_path_matches_array_path(line_docs):
+def test_drop_common_lines_join_path_matches_array_path(line_docs, monkeypatch):
+    from seafan_spark.llmops import dedup
+
     fast = drop_common_lines(line_docs, "id", "t", min_count=3)
-    slow = drop_common_lines(line_docs, "id", "t", min_count=3, array_cap=0)
+    # a cap of 0 forces the left-anti join + reassembly path
+    monkeypatch.setattr(dedup, "COMMON_LINES_ARRAY_CAP", 0)
+    slow = drop_common_lines(line_docs, "id", "t", min_count=3)
     cols = ["id", "n_lines", "n_dropped", "text_clean"]
     a = sorted(tuple(r) for r in fast.df.select(*cols).collect())
     b = sorted(tuple(r) for r in slow.df.select(*cols).collect())

@@ -85,6 +85,18 @@ def test_assess(spark):
     assert res.accuracy == pytest.approx(4 / 6)
 
 
+def test_assess_r2_df_no_predicted_positive_is_nan(spark):
+    """No row above the cutoff: precision is NaN like assess's, instead of
+    a DIVIDE_BY_ZERO abort under the default ANSI mode."""
+    from seafan_spark.diags import assess_r2_df
+
+    p = vec_to_pipe(spark, {"fit": [0.1, 0.2, 0.3, 0.4], "obs": [1.0, 0.0, 1.0, 0.0]})
+    row = assess_r2_df(p, "fit", "obs", cutoff=0.5).collect()[0]
+    assert math.isnan(row["precision"])
+    assert row["n"] == 4 and row["recall"] == 0.0 and row["accuracy"] == 0.5
+    assert math.isnan(assess(p, "fit", "obs", cutoff=0.5).precision)
+
+
 def test_r2_perfect_and_noisy(spark):
     ys = [float(i) for i in range(100)]
     p = vec_to_pipe(spark, {"obs": ys, "fit": ys})

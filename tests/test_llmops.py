@@ -200,26 +200,28 @@ def test_minhash_clusters(doc_pipe):
     assert labels[42] == 1
 
 
-def test_minhash_clusters_distributed_matches_driver(doc_pipe):
-    # driver_edge_cap=0 forces the distributed hook-and-jump loop; it must
+def test_minhash_clusters_distributed_matches_driver(doc_pipe, monkeypatch):
+    # an edge cap of 0 forces the distributed hook-and-jump loop; it must
     # produce exactly the union-find fast path's labels
+    from seafan_spark.llmops import dedup
+
     pairs = minhash_pairs(doc_pipe, "doc_id", "text", threshold=0.5)
     drv = {(r["id"], r["cluster"]) for r in minhash_clusters(pairs).collect()}
-    dist = {
-        (r["id"], r["cluster"])
-        for r in minhash_clusters(pairs, driver_edge_cap=0).collect()
-    }
+    monkeypatch.setattr(dedup, "CLUSTER_DRIVER_EDGE_CAP", 0)
+    dist = {(r["id"], r["cluster"]) for r in minhash_clusters(pairs).collect()}
     assert drv == dist and len(drv) > 0
 
 
-def test_clusters_distributed_long_chain(spark):
+def test_clusters_distributed_long_chain(spark, monkeypatch):
     # a 9-node path graph exercises pointer jumping past max_iter plain
     # propagation depth: component min must reach the far end
-    from seafan_spark.llmops.dedup import _clusters_driver  # noqa: F401
+    from seafan_spark.llmops import dedup
+
+    monkeypatch.setattr(dedup, "CLUSTER_DRIVER_EDGE_CAP", 0)
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(9)], "id_a long, id_b long"
     )
-    out = {r["id"]: r["cluster"] for r in minhash_clusters(edges, max_iter=6, driver_edge_cap=0).collect()}
+    out = {r["id"]: r["cluster"] for r in minhash_clusters(edges, max_iter=6).collect()}
     assert out == {i: 0 for i in range(10)}
 
 
@@ -1422,6 +1424,52 @@ def test_semantic_dedup_incremental_dropped_store_row_witnesses(spark):
         batch, store, cents, "vec_id", "embedding", eps=0.99, dim=4
     ).collect()
     assert [(r["_id"], r["_keep"]) for r in got] == [(9, 0)]
+
+
+def _kmeans_drift_rows():
+    rng = random.Random(5)
+    return [(i, [rng.gauss(0, 1) for _ in range(8)]) for i in range(200)]
+
+
+def test_semantic_dedup_incremental_kmeans_copy_lands_in_original_cell(spark):
+    """A kmeans store and a later batch share one assignment rule: every
+    exact re-ingested copy gets its stored original's cell, so it is
+    compared with (and dropped against) that original."""
+    from seafan_spark.llmops.dedup import (
+        semantic_dedup_incremental,
+        semantic_dedup_store_prepare,
+    )
+
+    rows = _kmeans_drift_rows()
+    base = vec_to_pipe(
+        spark, {"vec_id": [i for i, _ in rows], "embedding": [v for _, v in rows]}
+    )
+    store, cents = semantic_dedup_store_prepare(
+        base, "vec_id", "embedding", n_clusters=6, centroids="kmeans", dim=8
+    )
+    stored = {r["_id"]: r["_cell"] for r in store.collect()}
+    batch = vec_to_pipe(
+        spark,
+        {"vec_id": [1000 + i for i, _ in rows], "embedding": [v for _, v in rows]},
+    ).df
+    got = semantic_dedup_incremental(batch, store, cents, "vec_id", "embedding", dim=8)
+    copies = {r["_id"] - 1000: (r["_cell"], r["_keep"]) for r in got.collect()}
+    assert copies == {i: (stored[i], 0) for i in stored}
+
+
+def test_cluster_silhouette_kmeans_rows_nearest_own_centroid(spark):
+    """With unit-norm kmeans centroids every row's own cell is its nearest
+    centroid in the documented 1 - cos distance, so no silhouette is
+    negative."""
+    from seafan_spark.llmops.similarity import cluster_silhouette
+
+    rows = _kmeans_drift_rows()
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    out = cluster_silhouette(
+        df, "vec_id", "embedding", n_clusters=6, centroids="kmeans", dim=8
+    ).collect()
+    assert len(out) > 1
+    assert all(r["min_sil"] >= 0.0 for r in out), [tuple(r) for r in out]
 
 
 def test_hard_negatives_excludes_gold(spark):
