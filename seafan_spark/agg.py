@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from seafan_spark.ftypes import FRole
 from seafan_spark.pipeline import Pipeline
+from seafan_spark.session import _drop_zip_importers
 
 QUANTILE_U = [0.0, 0.1, 0.25, 0.5, 0.75, 0.9, 1.0]
 
@@ -232,6 +233,7 @@ def irr_by(
     fixed_cost = cost
 
     def solve(pdf: pd.DataFrame) -> pd.DataFrame:
+        _drop_zip_importers()
         pdf = pdf.sort_values(order_cols, kind="mergesort")
         flows = pdf[flow_col].to_numpy(dtype="float64")
         c = float(pdf[cost_col].iloc[0]) if cost_col else float(fixed_cost)
@@ -1155,6 +1157,7 @@ def ols_multi_by(
     moment_cols = [f.name for f in m.schema.fields]
 
     def solve(batches):
+        _drop_zip_importers()
         for pdf in batches:
             rows = []
             for _, r in pdf.iterrows():

@@ -20,7 +20,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from seafan_spark.rounding import round_col
-from seafan_spark.session import unpersist_checkpoint
+from seafan_spark.session import _drop_zip_importers, unpersist_checkpoint
 
 from seafan_spark.llmops.text import fingerprint_col, hash60_col, shingles_col, word_ngrams_col
 from seafan_spark.pipeline import Pipeline
@@ -1451,6 +1451,7 @@ def _exact_pairs_blocked(d: DataFrame, threshold: float) -> DataFrame:
     )
 
     def score(batches):
+        _drop_zip_importers()
         corpus_ids, corpus = b_ids.value, b_mat.value
         for block in batches:
             if not len(block):

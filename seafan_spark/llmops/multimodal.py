@@ -25,6 +25,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from seafan_spark.session import _drop_zip_importers
+
 MEDIA_SCHEMA = T.StructType(
     [
         T.StructField("media_type", T.StringType()),  # image|audio|video
@@ -141,6 +143,7 @@ def extract_image_features(
     )
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        _drop_zip_importers()
         decode = _pil_decode_image if mode == "pil" else _fake_decode_image
         for pdf in it:
             rows = []
@@ -174,6 +177,7 @@ def resize_images(
     )
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        _drop_zip_importers()
         tag = f"resized:{size[0]}x{size[1]}:".encode()
 
         def one(p) -> bytes:
@@ -212,6 +216,7 @@ def sample_video_frames(
     )
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        _drop_zip_importers()
         for pdf in it:
             if STRICT_STUBS:
                 raise NotImplementedError("video decoding requires ffmpeg")
@@ -273,6 +278,7 @@ def phash_signatures(
     )
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        _drop_zip_importers()
         import io  # noqa: PLC0415
 
         for pdf in it:

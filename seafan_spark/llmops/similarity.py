@@ -27,7 +27,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from seafan_spark.rounding import round_col
-from seafan_spark.session import unpersist_checkpoint
+from seafan_spark.session import _drop_zip_importers, unpersist_checkpoint
 
 from seafan_spark.pipeline import Pipeline
 
@@ -1030,6 +1030,7 @@ def _pca_moment_row(d_df: DataFrame, dim: int) -> tuple[int, "object", "object"]
     import pandas as pd
 
     def partial(batches):
+        _drop_zip_importers()
         for pdf in batches:
             if len(pdf) == 0:
                 continue

@@ -51,7 +51,7 @@ from pyspark.ml.classification import (
     MultilayerPerceptronClassificationModel,
     MultilayerPerceptronClassifier,
 )
-from pyspark.ml.feature import VectorAssembler
+from pyspark.ml.feature import VectorAssembler, VectorSizeHint
 from pyspark.ml.functions import array_to_vector, vector_to_array
 from pyspark.ml.regression import LinearRegression, LinearRegressionModel
 from pyspark.sql import DataFrame
@@ -248,6 +248,9 @@ def _assemble(pipe: Pipeline, ms: ModSpec) -> tuple[DataFrame, list[str], int]:
         if ft.role in (FRole.ONE_HOT, FRole.EMBED):
             vc = f"_v_{ft.name}"
             d = d.withColumn(vc, array_to_vector(F.col(ft.name)))
+            # the width is known; declared, VectorAssembler runs no
+            # first() job to size it, and a mis-sized row still fails
+            d = VectorSizeHint(inputCol=vc, size=ft.cats, handleInvalid="error").transform(d)
             vec_inputs.append(vc)
             n_feat += ft.cats
         else:

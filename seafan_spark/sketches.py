@@ -30,6 +30,8 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from seafan_spark.session import _drop_zip_importers
+
 DEFAULT_LG_K = 12
 
 
@@ -129,6 +131,7 @@ def misra_gries_candidates(
     col = item_col
 
     def mg(batches):
+        _drop_zip_importers()
         counts: dict = {}
         n_p = 0
         for pdf in batches:

@@ -46,7 +46,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import DataStreamWriter
 
-from seafan_spark.session import checkpoint_scope
+from seafan_spark.session import _drop_zip_importers, checkpoint_scope
 
 EVENT_TIME = "_event_time"
 
@@ -246,6 +246,7 @@ _STATE_SCHEMA = "n BIGINT, total DOUBLE"
 def _running_totals_fn(key, pdf_iter, state):
     """Fold each Arrow batch for one key into (count, sum) state and emit
     the updated running totals once per trigger."""
+    _drop_zip_importers()
     # GroupState.get is a PROPERTY in pyspark (calling it would invoke the
     # state tuple itself and crash on the second trigger for any key)
     n, total = state.get if state.exists else (0, 0.0)

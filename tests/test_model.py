@@ -260,3 +260,30 @@ def test_glm_moments_matches_numpy(spark):
     fr = fit(p, ms, max_iter=100)
     got = [float(c) for c in fr.model.coefficients] + [float(fr.model.intercept)]
     assert got == pytest.approx(list(beta), abs=1e-4)
+
+
+def test_assemble_declares_one_hot_width(spark):
+    """A one-hot input's width comes from its FType: building the
+    features column launches no Spark job, and a row of another width
+    fails instead of silently changing the feature count."""
+    from pyspark.sql import functions as F
+
+    from seafan_spark.model import _assemble
+
+    p = vec_to_pipe(spark, {"x": [0.1, 0.5, 0.9], "g": ["lo", "mid", "hi"]})
+    p = make_one_hot(append_cat(p, "g"), "g", "goh")
+    ms = parse_modspec(["Input(x+goh)", "FC(size:1)", "Target(x)"])
+    sc = spark.sparkContext
+    sc.setJobGroup("assemble-width", "_assemble")
+    try:
+        d, _, n_feat = _assemble(p, ms)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("assemble-width")) == []
+    assert n_feat == 4
+    assert [len(r["_features"]) for r in d.select("_features").collect()] == [4, 4, 4]
+
+    wide = p._derive(p.df.withColumn("goh", F.concat("goh", F.array(F.lit(0.0)))), fts=p.fts)
+    d_wide, _, _ = _assemble(wide, ms)
+    with pytest.raises(Exception, match="size 3"):
+        d_wide.select("_features").collect()
