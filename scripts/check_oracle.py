@@ -4,15 +4,12 @@ __spark_entry__ query at a given SF and compare against its DuckDB oracle
 
 Usage: python scripts/check_oracle.py [sf_dir] [query ...]
 
-Set SPARK_GRAFT_ORACLE_OUT=<path.json> to also persist the per-query
-results (status + row counts) as a JSON artifact, so local gate runs can
-be committed alongside the driver's CORRECTNESS_r{N}.json.
+Prints one PASS / OK? (rows-only) / FAIL line per query, then ALL PASS or
+the failure count; exits non-zero on any failure or unknown query name.
 """
 
 from __future__ import annotations
 
-import json
-import os
 import sys
 
 import duckdb
@@ -87,7 +84,6 @@ def main():
 
     qs, oracles = entrymod.queries(), entrymod.oracle_sql()
     failures = 0
-    results: dict[str, dict] = {}
     for name, fn in qs.items():
         if only and name not in only:
             continue
@@ -101,12 +97,10 @@ def main():
             srows = [tuple(r) for r in sdf.collect()]
         except Exception as ex:
             print(f"FAIL {name}: spark error: {str(ex)[:200]}")
-            results[name] = {"status": "FAIL", "err": f"spark: {str(ex)[:200]}"}
             failures += 1
             continue
         if name not in oracles:
             print(f"OK?  {name}: rows-only check, {len(srows)} rows")
-            results[name] = {"status": "ROWS_ONLY", "spark_rows": len(srows)}
             continue
         try:
             res = con.sql(oracles[name])
@@ -114,20 +108,14 @@ def main():
             drows = res.fetchall()
         except Exception as ex:
             print(f"FAIL {name}: duckdb error: {str(ex)[:200]}")
-            results[name] = {"status": "FAIL", "err": f"duckdb: {str(ex)[:200]}"}
             failures += 1
             continue
         if sorted(scols) != sorted(dcols):
             print(f"FAIL {name}: schema {sorted(scols)} vs {sorted(dcols)}")
-            results[name] = {"status": "FAIL", "err": "schema mismatch"}
             failures += 1
             continue
         if len(srows) != len(drows):
             print(f"FAIL {name}: rowcount {len(srows)} vs {len(drows)}")
-            results[name] = {
-                "status": "FAIL", "err": "rowcount",
-                "spark_rows": len(srows), "oracle_rows": len(drows),
-            }
             failures += 1
             continue
         _, skey = frame_key(scols, srows)
@@ -137,21 +125,10 @@ def main():
             print(f"FAIL {name}: value mismatch at sorted-row {bad}:")
             print(f"  spark : {skey[bad]}")
             print(f"  duckdb: {dkey[bad]}")
-            results[name] = {"status": "FAIL", "err": "value mismatch"}
             failures += 1
             continue
         print(f"PASS {name} ({len(srows)} rows)")
-        results[name] = {
-            "status": "PASS", "spark_rows": len(srows), "oracle_rows": len(drows),
-        }
     print(f"\n{'ALL PASS' if failures == 0 else f'{failures} FAILURES'}")
-    out = os.environ.get("SPARK_GRAFT_ORACLE_OUT")
-    if out:
-        with open(out, "w") as fh:
-            json.dump(
-                {"sf_dir": sf_dir, "failures": failures, "queries": results},
-                fh, indent=1,
-            )
     sys.exit(1 if failures else 0)
 
 

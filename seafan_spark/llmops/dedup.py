@@ -2138,9 +2138,10 @@ def semantic_dedup(
     is O(sum c_i^2), so ``n_clusters=None`` (the default) resolves to
     ≈√N via :func:`adaptive_n_clusters` — one cheap count, and the pair
     stage stays LINEAR in N with defaults (the SemDeDup paper runs 50k
-    clusters on LAION at this ratio; measured 10x exponent in
-    SCALING.md). Pass an explicit k to pin the quantizer (the oracle
-    does).
+    clusters on LAION at this ratio; on a 10x replica of sf0.1 the
+    default measured a time exponent of 0.915 per 10x rows, against
+    1.150 at a fixed k=8). Pass an explicit k to pin the quantizer (the
+    oracle does).
     """
     store, _ = semantic_dedup_store_prepare(
         pipe, id_col, vec_col, n_clusters, eps, centroids, seed, max_iter, dim

@@ -73,14 +73,15 @@ def get_session(
         # parquet TIMESTAMP(NANOS) (e.g. pandas-written event streams) reads
         # as bigint nanoseconds instead of erroring
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # local-mode: all task threads share the driver JVM heap. 8g
-        # measured best for the bench workload — larger heaps made the
-        # inter-query full GCs (bench hygiene) disproportionately slow.
-        # On a real cluster this is spark.executor.memory territory.
+        # local-mode: all task threads share the driver JVM heap. On a
+        # real cluster this is spark.executor.memory territory.
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         # pin the initial heap to the max and pre-touch it: adaptive heap
-        # growth + lazy page commit made identical bench processes differ
-        # 30-40% on individual queries (run-level, not trial-level, noise)
+        # growth + lazy page commit made identical processes differ 30-40%
+        # on individual queries (run-level, not trial-level, noise). The
+        # cost: the whole heap (8 GB by default) is resident from start-up,
+        # so run one engine process per 15 GB host, or set
+        # SPARK_GRAFT_DRIVER_MEM lower to run two side by side.
         .config(
             "spark.driver.extraJavaOptions",
             f"-Xms{os.environ.get('SPARK_GRAFT_DRIVER_MEM', '8g')} -XX:+AlwaysPreTouch",
@@ -132,8 +133,8 @@ def _drop_zip_importers() -> None:
 # - ESCAPING checkpoints (the returned DataFrame's lineage needs the
 #   blocks — materialized join sides, incremental stores) stay alive by
 #   necessity; callers running many independent queries in one session
-#   free them BETWEEN queries with :func:`cleanup` (bench.py and
-#   scripts/check_oracle.py do).
+#   free them BETWEEN queries with :func:`cleanup` (perfbench/run.py
+#   does; scripts/check_oracle.py passes ``all=True``).
 #
 # Freeing a local checkpoint invalidates every DataFrame whose lineage
 # reads it (the lineage was truncated at checkpoint time; the blocks ARE
@@ -201,8 +202,8 @@ def cleanup(spark: SparkSession, all: bool = False) -> int:
     persistence API library code uses, and a user's cache goes through
     the SQL cache manager, never through it. ``all=True`` restores the
     scorched-earth behavior (every persisted RDD + the SQL cache) for
-    benchmark harnesses that want full isolation between queries
-    (bench.py and scripts/check_oracle.py pass it)."""
+    harnesses that want full isolation between queries
+    (scripts/check_oracle.py passes it)."""
     n = 0
     try:
         jmap = spark.sparkContext._jsc.getPersistentRDDs()
