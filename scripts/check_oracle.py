@@ -11,10 +11,12 @@ the failure count; exits non-zero on any failure or unknown query name.
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+# the engine and registry of the checkout this script lives in
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 import __spark_entry__ as entrymod
 

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from seafan_spark.ftypes import FRole
 from seafan_spark.pipeline import Pipeline
+from seafan_spark.session import _plan_literal
 from seafan_spark.slicer import Slice
 
 THRESH = 0.5  # binary threshold (diags.go thresh const)
@@ -348,14 +349,16 @@ def marginal(
             .limit(max_cats)
             .collect()
         ]
-        sweep = F.array(*[F.lit(v) for v in levels])
+        sweep = _plan_literal(levels, f"array<{dtype}>")
     else:
         q = pipe.df.agg(
             F.min(F.col(feat).cast("double")).alias("q0"),
             F.max(F.col(feat).cast("double")).alias("q100"),
         ).collect()[0]
         dp = (q["q100"] - q["q0"]) / 5.0
-        sweep = F.array(*[F.lit(q["q0"] + dp * g) for g in range(1, n_sweep + 1)])
+        sweep = _plan_literal(
+            [q["q0"] + dp * g for g in range(1, n_sweep + 1)], "array<double>"
+        )
 
     d = d.withColumn("x_value", F.explode(sweep)).withColumn(feat, F.col("x_value"))
     swept = pipe._derive(d)
@@ -446,7 +449,7 @@ def isotonic_calibrate(
     edges = sorted({v for v in qs.values() if v is not None})
     if not edges:
         raise ValueError("isotonic_calibrate: no non-null scores")
-    earr = F.array(*[F.lit(float(e)) for e in edges])
+    earr = _plan_literal([float(e) for e in edges], "array<double>")
     score = F.col(score_col).cast("double")
     # bin = number of edges <= score, 1-based (JVM O(bins) per row)
     bin_col = F.aggregate(

@@ -33,6 +33,8 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from seafan_spark.session import _plan_literal
+
 
 def bucket_col(v: Column, lo: float, hi: float, nbins: int) -> Column:
     """Equi-width bucket index of ``v`` over [lo, hi): 0 = underflow,
@@ -138,7 +140,7 @@ def quantiles_from_histogram(
         else Window.orderBy("bucket")
     )
     wt = wc.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    qarr = F.array(*[F.lit(float(q)) for q in qs])
+    qarr = _plan_literal([float(q) for q in qs], "array<double>")
     d = (
         hist.withColumn("_cume", F.sum("cnt").over(wc))
         .withColumn("_total", F.sum("cnt").over(wt))

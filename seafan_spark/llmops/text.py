@@ -14,6 +14,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from seafan_spark.rounding import round_col
+from seafan_spark.session import _plan_literal
 
 # small per-language stopword probes (word-boundary counted, lowercased)
 LANG_STOPWORDS: dict[str, list[str]] = {
@@ -84,14 +85,21 @@ def avg_token_len_col(text: Column) -> Column:
     return F.when(toks == 0, F.lit(0.0)).otherwise(nonspace.cast("double") / toks)
 
 
+def _token_hits(toks: Column, words: list[str]) -> Column:
+    """Count of the tokens in ``toks`` equal to any of ``words``: one
+    array filter testing each token against the word list, which enters
+    the plan as one literal."""
+    ws = _plan_literal(list(words), "array<string>")
+    return F.size(F.filter(toks, lambda t: F.array_contains(ws, t))).cast("long")
+
+
 def stopword_hits_col(text: Column, words: list[str]) -> Column:
     """Count of whitespace tokens equal to any of the given (lowercased)
     words: one split of the normalized text, then a single array filter
-    with a short IN-list — O(tokens) cheap string equality, no repeated
-    whole-text scans. SQL twin: ``len(list_filter(str_split(norm, ' '),
-    t -> t IN (...)))``."""
-    toks = F.split(norm_text_col(text), " ")
-    return F.size(F.filter(toks, lambda t: t.isin(*words))).cast("long")
+    over a short word list — O(tokens) cheap string equality, no
+    repeated whole-text scans. SQL twin: ``len(list_filter(str_split(norm,
+    ' '), t -> t IN (...)))``."""
+    return _token_hits(F.split(norm_text_col(text), " "), words)
 
 
 def lang_id_col(text: Column, langs: dict[str, list[str]] | None = None) -> Column:
@@ -153,13 +161,8 @@ def add_text_features(df, text_col: str = "text"):
             "_toks": F.split(norm_text_col(t), " "),
         }
     )
-    def _in_set(ws):
-        # factory keeps the lambda single-argument — pyspark dispatches
-        # higher-order-function lambdas on parameter count
-        return lambda x: x.isin(*ws)
-
     hit_cols = {
-        f"_h_{lang}": F.size(F.filter(F.col("_toks"), _in_set(ws))).cast("long")
+        f"_h_{lang}": _token_hits(F.col("_toks"), ws)
         for lang, ws in sorted(LANG_STOPWORDS.items())
     }
     s2 = s1.withColumns(

@@ -26,6 +26,8 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from seafan_spark.session import _plan_literal
+
 
 @dataclass(frozen=True)
 class Rule:
@@ -167,7 +169,7 @@ def benford_report(df, value_col: str, keys=()):
     )
     # densify to all 9 digits per group: zero-count digits must appear
     # (and contribute n*ben_d to chi2). The skeleton is group-sized x 9.
-    all_digits = F.explode(F.array(*[F.lit(i) for i in range(1, 10)])).alias("digit")
+    all_digits = F.explode(_plan_literal(list(range(1, 10)), "array<int>")).alias("digit")
     if keys:
         skeleton = counts.select(*keys).distinct().select(*keys, all_digits)
     else:
@@ -175,7 +177,7 @@ def benford_report(df, value_col: str, keys=()):
     counts = skeleton.join(counts, [*keys, "digit"], "left").fillna(0, subset=["n_d"])
     w = Window.partitionBy(*keys) if keys else Window.partitionBy(F.lit(0))
     ben = F.element_at(
-        F.array(*[F.lit(math.log10(1 + 1 / dd)) for dd in range(1, 10)]),
+        _plan_literal([math.log10(1 + 1 / dd) for dd in range(1, 10)], "array<double>"),
         F.col("digit"),
     )
     n = F.sum("n_d").over(w)

@@ -30,7 +30,7 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from seafan_spark.session import _drop_zip_importers
+from seafan_spark.session import _drop_zip_importers, _plan_literal
 
 DEFAULT_LG_K = 12
 
@@ -396,7 +396,7 @@ def cms_build(
     e = d.select(
         *keys,
         "_it",
-        F.explode(F.array(*[F.lit(r) for r in range(depth)])).alias("row"),
+        F.explode(_plan_literal(list(range(depth)), "array<int>")).alias("row"),
     )
     return (
         e.select(
@@ -449,7 +449,7 @@ def cms_estimate(
         .select(
             *keys,
             "item",
-            F.explode(F.array(*[F.lit(r) for r in range(depth)])).alias("row"),
+            F.explode(_plan_literal(list(range(depth)), "array<int>")).alias("row"),
         )
         .withColumn(
             "bucket", _cms_bucket(F.col("item"), F.col("row"), width, portable)

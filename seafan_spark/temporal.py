@@ -30,6 +30,7 @@ from pyspark.sql import types as T
 
 
 from seafan_spark.pipeline import as_df as _df  # shared unwrap contract
+from seafan_spark.session import _plan_literal
 
 
 def epoch_us_col(df: DataFrame, col: str) -> Column:
@@ -515,7 +516,7 @@ def ts_topk_matches(
         qmu = sum(qvals) / L
         qsd = (sum((v - qmu) ** 2 for v in qvals) / L) ** 0.5
         qvals = [0.0 if qsd == 0 else (v - qmu) / qsd for v in qvals]
-    qlit = F.array(*[F.lit(v) for v in qvals])
+    qlit = _plan_literal(qvals, "array<double>")
     arr = F.collect_list("_v").over(fr)
 
     def sq_sum(pairs):
