@@ -23,6 +23,7 @@ from seafan_spark.exprlang import add_to_pipe
 from seafan_spark.ftypes import FParam, FType, FRole
 from seafan_spark.pipeline import Pipeline
 from seafan_spark.rounding import round_col
+from seafan_spark.session import _local_frame
 from seafan_spark.sources import parquet_to_pipe
 
 
@@ -1163,7 +1164,7 @@ def q_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = _pipe(spark, sf_dir, "lineitem")
     p = p.with_column("obs", (F.col("l_quantity") > 25).cast("double"))
     v = ks(p, "l_extendedprice", "obs", bins=1000)
-    return spark.createDataFrame([(round(v, 4),)], schema="ks double")
+    return _local_frame(spark, [(round(v, 4),)], schema="ks double")
 
 
 def q_coalesce_logodds(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1504,7 +1505,7 @@ def q_irr_bisect(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("user_id") == 0
     )
     rate = irr_bisect(flows, "value", ["ts", "event_id"], steps=40)
-    return spark.createDataFrame([(round(rate, 6),)], "rate double")
+    return _local_frame(spark, [(round(rate, 6),)], "rate double")
 
 
 def q_irr_by_bisect(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1637,7 +1638,8 @@ def q_model_glm(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     fr = fit(p, ms, max_iter=50)
     coefs = [float(c) for c in fr.model.coefficients] + [float(fr.model.intercept)]
-    return spark.createDataFrame(
+    return _local_frame(
+        spark,
         [tuple(round(c, 4) for c in coefs)], schema="b_qty double, b_disc double, b0 double"
     )
 
@@ -3664,7 +3666,7 @@ def q_cox_ph(spark: SparkSession, sf_dir: str) -> DataFrame:
         (r["name"], round(r["beta"], 6), round(r["hr"], 6), round(r["se"], 6))
         for r in res
     ]
-    return spark.createDataFrame(rows, "name string, beta double, hr double, se double")
+    return _local_frame(spark, rows, "name string, beta double, hr double, se double")
 
 
 def q_cox_moments(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -32,6 +32,8 @@ from typing import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from seafan_spark.session import _local_frame
+
 
 def did_estimator(
     df,
@@ -830,4 +832,4 @@ def propensity_match_greedy(
         "control_score double",
         "distance double",
     ]
-    return spark.createDataFrame(out_rows, ", ".join(fields))
+    return _local_frame(spark, out_rows, ", ".join(fields))

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 from seafan_spark.ftypes import FRole
 from seafan_spark.pipeline import Pipeline
-from seafan_spark.session import _plan_literal
+from seafan_spark.session import _local_frame, _plan_literal
 from seafan_spark.slicer import Slice
 
 THRESH = 0.5  # binary threshold (diags.go thresh const)
@@ -499,7 +499,8 @@ def isotonic_calibrate(
         )
         for r, v in zip(rows, out_vals)
     ]
-    res = spark.createDataFrame(
+    res = _local_frame(
+        spark,
         out_rows,
         "bin int, score_lo double, n bigint, mean_score double, "
         "mean_label double, calibrated double",

@@ -31,6 +31,7 @@ from pyspark.sql import types as T
 
 from seafan_spark.ftypes import FParam, FRole, FType, FTypes
 from seafan_spark.pipeline import Pipeline
+from seafan_spark.session import _local_frame
 
 _MAP_LITERAL_MAX = 10_000
 
@@ -120,7 +121,8 @@ def join_cat_codes(pipe: Pipeline, ft: FType, out_name: str) -> Pipeline:
     if ft.fp.levels is None:
         raise EncodeError(f"field {ft.name} has no fitted levels")
     spark = pipe.spark
-    dict_df = spark.createDataFrame(
+    dict_df = _local_frame(
+        spark,
         [(k, v) for k, v in ft.fp.levels.items()], schema=[ft.name, out_name]
     )
     joined = pipe.df.join(F.broadcast(dict_df), on=ft.name, how="left")

@@ -27,7 +27,12 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from seafan_spark.rounding import round_col
-from seafan_spark.session import _drop_zip_importers, _plan_literal, unpersist_checkpoint
+from seafan_spark.session import (
+    _drop_zip_importers,
+    _local_frame,
+    _plan_literal,
+    unpersist_checkpoint,
+)
 
 from seafan_spark.pipeline import Pipeline
 
@@ -269,7 +274,7 @@ def _with_flat_weights(df: DataFrame, flat: list[float]) -> DataFrame:
     """Attach a flat weight vector as one broadcast-joined array column
     ``_wflat`` (single 1-row build side, zero plan literals)."""
     spark = df.sparkSession
-    wdf = spark.createDataFrame([(flat,)], "_wflat array<double>")
+    wdf = _local_frame(spark, [(flat,)], "_wflat array<double>")
     return df.crossJoin(F.broadcast(wdf))
 
 
@@ -394,7 +399,7 @@ def ann_ivf_topk(
             probe_rows.append((r[query_id], [float(x) for x in qv], int(cell)))
     if not probe_rows:
         raise ValueError("ann_ivf_topk: empty query set")
-    qdf = spark.createDataFrame(probe_rows, schema=[query_id, query_vec, "_cell"])
+    qdf = _local_frame(spark, probe_rows, schema=[query_id, query_vec, "_cell"])
     cand = assigned.join(F.broadcast(qdf), "_cell").filter(
         F.col("_nid") != F.col(query_id)
     )
@@ -720,7 +725,7 @@ def ann_pq_topk(
         for qv in ([float(x) for x in r[query_vec]],)
     ]
     spark = df.sparkSession
-    qdf = spark.createDataFrame(lut_rows, schema=[query_id, query_vec, "_lut"])
+    qdf = _local_frame(spark, lut_rows, schema=[query_id, query_vec, "_lut"])
     # ADC over codes: sum_j LUT[j*k_codes + code_j]  (1-based element_at)
     adc = _adc_over_codes(F.col("_codes"), F.col("_lut"), m, k_codes)
     cand = (
@@ -900,7 +905,8 @@ def kcenter_select(
     # from driver-side rows
     unpersist_checkpoint(unit)
     spark = df.sparkSession
-    return spark.createDataFrame(
+    return _local_frame(
+        spark,
         [Row(round=r, id=i, dist=d) for r, i, d in chosen],
         schema="round int, id bigint, dist double",
     )
@@ -1001,7 +1007,8 @@ def mmr_select(
         picked_lits.append(_double_array(top[0]["_v"]))
     unpersist_checkpoint(unit)
     spark = df.sparkSession
-    return spark.createDataFrame(
+    return _local_frame(
+        spark,
         [Row(round=r, id=i, rel=rel, mmr=m) for r, i, rel, m in chosen],
         schema="round int, id bigint, rel double, mmr double",
     )
@@ -1072,7 +1079,8 @@ def pca_moments(df: DataFrame, vec_col: str) -> DataFrame:
         for i in range(dim)
         for j in range(dim)
     ]
-    out = df.sparkSession.createDataFrame(
+    out = _local_frame(
+        df.sparkSession,
         rows, "i int, j int, n bigint, mean_i double, mean_j double, gram double"
     )
     return out.select(

@@ -14,7 +14,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from seafan_spark.rounding import round_col
-from seafan_spark.session import _plan_literal
+from seafan_spark.session import _local_frame, _plan_literal
 
 # small per-language stopword probes (word-boundary counted, lowercased)
 LANG_STOPWORDS: dict[str, list[str]] = {
@@ -1051,7 +1051,8 @@ def bpe_train(
             ),
         )
     unpersist_checkpoint(prev_ck)
-    return df.sparkSession.createDataFrame(
+    return _local_frame(
+        df.sparkSession,
         merges, "rank bigint, lhs string, rhs string, merged string, pair_count bigint"
     )
 

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from seafan_spark.session import _local_frame
+
 OrderKeys = list[tuple[str, bool]]  # (column, ascending)
 
 #: Above this many per-partition carry entries, the carry-ins ride back
@@ -95,7 +97,8 @@ def global_row_number(
             pairs += [F.lit(pid), F.lit(adj)]
         adj_col = F.create_map(*pairs)[F.col("_gpid")]
     else:
-        offsets = d.sparkSession.createDataFrame(
+        offsets = _local_frame(
+            d.sparkSession,
             rows, "_gpid int, _grn_adj long"
         )
         d = d.join(F.broadcast(offsets), "_gpid", "left")
@@ -273,7 +276,8 @@ def attach_running_ops(
             )
         d = d.withColumns(attach_carry)
     else:
-        carry = d.sparkSession.createDataFrame(
+        carry = _local_frame(
+            d.sparkSession,
             [tuple(carry_vals[pid]) for pid in pids], T.StructType(carry_fields)
         )
         d = d.join(F.broadcast(carry), "_gpid", "left")

@@ -30,6 +30,7 @@ _BUCKETS = 1_000_000
 
 
 from seafan_spark.pipeline import as_df as _df  # shared unwrap contract
+from seafan_spark.session import _local_frame
 
 
 def hash_bucket_col(key: Column, salt: str = "") -> Column:
@@ -583,7 +584,8 @@ def rake_cells(
     schema = ", ".join(
         f"`{c}` {cells_df.schema[c].dataType.simpleString()}" for c in dims
     )
-    return spark.createDataFrame(
+    return _local_frame(
+        spark,
         out_rows, schema=f"{schema}, n bigint, w double, factor double"
     )
 

@@ -49,13 +49,40 @@ to that). SQL text through ``F.expr`` is not used: its parse time grows
 with the literal. Building and optimizing a centroid-scoring query over a
 k x 64 table (4-vCPU VM): k=256 took 8.3-8.6 s one element at a time,
 1.8-2.2 s as SQL text and 0.13-0.14 s here; k=4096 took 27-30 s as SQL
-text and 0.6-0.9 s here.
+text and 0.6-0.9 s here. Before it serializes, :func:`_plan_literal`
+checks the value against the type with ``createDataFrame``'s row check
+(0.16 s for a 4096 x 64 centroid table, against 0.35 s for its
+``json.dumps``), so a value that does not fit raises at the call.
+
+Local frames
+------------
+``spark.createDataFrame(list_of_rows, schema)`` parallelizes the rows
+into a Python RDD: collecting even a one-row frame launches 1 job and 4
+Python tasks that re-pickle the rows. On a warm ``local[4]`` session
+(4-vCPU VM, medians of 15 build + collect calls) 1 row x 3 doubles took
+1.28 CPU-s of the engine's processes and 0.44 s wall, and 8 rows x
+``array<double>[64]`` 1.12 CPU-s and 0.37 s. The same rows as a
+``pyarrow.Table`` took 0.04 CPU-s and 0.03 s: the result is a
+``LocalRelation``, so collecting it launches no job and runs no Python
+task, at any size (5,000 and 200,000 rows measured). :func:`_local_frame`
+is the one way ``seafan_spark`` turns driver-side rows into a DataFrame
+(``tests/test_local_frame.py`` holds every site to that). It checks and
+converts the rows exactly as the list path does, so schemas and values
+do not change; a naive datetime is local time there, as in the list
+path and ``F.lit`` (pyspark's own Arrow path would read it in the
+session time zone, UTC by default; the two agree on a UTC host).
+
+The exception is ``sources.vec_to_pipe``, which keeps ``createDataFrame``:
+its frames stand in for scanned tables in the tests, and a local relation
+would have their projections and filters folded at plan time by the
+interpreter instead of run through generated code as a scan's are.
 """
 
 from __future__ import annotations
 
 import datetime
 import decimal
+import functools
 import json
 import os
 import sys
@@ -65,6 +92,12 @@ from contextlib import contextmanager
 from pyspark import TaskContext
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    StructType,
+    _create_converter,
+    _make_type_verifier,
+    _parse_datatype_string,
+)
 
 
 def get_session(
@@ -143,6 +176,13 @@ def _json_scalar(v):
     raise TypeError(f"_plan_literal: cannot encode {type(v).__name__} {v!r}")
 
 
+@functools.lru_cache(maxsize=256)
+def _literal_check(ddl_type: str):
+    # parsed once per type: the parse is a JVM round trip (~3.5 ms), and
+    # queries rebuilt pass after pass ask for the same few types
+    return _make_type_verifier(_parse_datatype_string(ddl_type), name="_plan_literal")
+
+
 def _plan_literal(value, ddl_type: str) -> Column:
     """``value`` (a list, a list of dicts for structs, nested lists) as
     one constant of SQL type ``ddl_type`` (``"array<double>"``,
@@ -152,10 +192,55 @@ def _plan_literal(value, ddl_type: str) -> Column:
     Floats round-trip exactly (``json`` writes ``repr``; NaN and ±inf
     go through as ``NaN``/``Infinity``), dates, datetimes and decimals go
     through as text, and ``None`` elements stay NULL.
-    A value that does not fit the type (2**70 as ``bigint``, a string as
-    ``double``) fails the query instead of turning into NULL."""
+    A value that does not fit the type (2**70 as ``bigint``, a string or
+    an ``int`` as ``double``) raises ``TypeError``/``ValueError`` here,
+    from the row check :func:`_local_frame` and ``createDataFrame`` run,
+    instead of failing the query later."""
+    _literal_check(ddl_type)(value)
     text = json.dumps(value, default=_json_scalar)
     return F.from_json(F.lit(text), ddl_type, {"mode": "FAILFAST"})
+
+
+def _local_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """Driver-side ``rows`` (tuples, lists, ``Row``s or dicts) as a
+    DataFrame that collects with no Spark job and no Python task (see
+    "Local frames" above). ``schema`` is a ``StructType``, a DDL string
+    (``"ks double"``) or a list of column names; names alone take the
+    schema ``createDataFrame`` infers from the rows.
+
+    Each row is checked against the schema as ``createDataFrame`` checks
+    it, so a row that does not fit (an ``int`` or a string in a
+    ``double`` column, 2**70 in a ``bigint``) raises ``TypeError`` /
+    ``ValueError`` here. The rows then take ``createDataFrame``'s own
+    conversion (``toInternal``), so every value, ``-0.0``, NaN and a
+    naive datetime (local time) included, is what the list path gives."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    rows = list(rows)
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    if isinstance(schema, (list, tuple)):
+        names = list(schema)
+        struct = spark._inferSchemaFromList(rows, names=names)
+        for i, name in enumerate(names):
+            struct.fields[i].name = name
+            struct.names[i] = name
+    elif isinstance(schema, StructType):
+        struct = schema
+        verify = _make_type_verifier(struct)
+        for row in rows:
+            verify(row)
+    else:
+        raise TypeError(f"_local_frame: schema must be a struct, got {schema!r}")
+    convert = _create_converter(struct)
+    internal = [struct.toInternal(convert(row)) for row in rows]
+    columns = list(zip(*internal)) if internal else [()] * len(struct.fields)
+    # Arrow takes the internal integers of dates (days) and timestamps
+    # (microseconds) as they are, nested ones included
+    arrow_schema = to_arrow_schema(struct)
+    arrays = [pa.array(col, type=t) for col, t in zip(columns, arrow_schema.types)]
+    return spark.createDataFrame(pa.Table.from_arrays(arrays, schema=arrow_schema), struct)
 
 
 # ---------------------------------------------------------------------------
@@ -212,7 +297,7 @@ def checkpoint_scope(spark: SparkSession):
     """Free every RDD persisted inside the ``with`` block on exit.
 
     For ops whose result is DRIVER-side (fitted weights, a
-    createDataFrame of collected rows): every checkpoint taken inside is
+    :func:`_local_frame` of collected rows): every checkpoint taken inside is
     scratch by construction, so the scope can reclaim them wholesale
     without knowing the sites. Do NOT use where the returned DataFrame's
     lineage includes a checkpoint taken inside."""

@@ -190,7 +190,14 @@ def vec_to_pipe(
     keep_raw: bool = True,
 ) -> "Pipeline":
     """Build a pipeline from in-memory column vectors (VecFromAny,
-    vec.go:38-70). Driver-side convenience for tests/small dims."""
+    vec.go:38-70). Driver-side convenience for tests/small dims.
+
+    The one ``createDataFrame`` of driver rows that does not go through
+    ``session._local_frame``: these frames stand in for scanned tables in
+    the tests. A local relation would let Catalyst's
+    ``ConvertToLocalRelation`` evaluate their projections and filters in
+    the interpreter at plan time, instead of through the generated code
+    a parquet scan runs."""
     from seafan_spark.pipeline import Pipeline
 
     names = list(data)

@@ -46,7 +46,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import DataStreamWriter
 
-from seafan_spark.session import _drop_zip_importers, checkpoint_scope
+from seafan_spark.session import _drop_zip_importers, _local_frame, checkpoint_scope
 
 EVENT_TIME = "_event_time"
 
@@ -504,7 +504,7 @@ def stream_dedup_ingest(
         pairs = minhash_pairs_incremental(
             batch_df,
             store if store is not None
-            else batch_df.sparkSession.createDataFrame([], new_sig.schema),
+            else _local_frame(batch_df.sparkSession, [], new_sig.schema),
             id_col,
             text_col,
             num_hashes=num_hashes,
@@ -583,7 +583,7 @@ def stream_embed_ingest(
         pairs = embedding_neardup_incremental(
             batch_df,
             store if store is not None
-            else batch_df.sparkSession.createDataFrame([], prepared.schema),
+            else _local_frame(batch_df.sparkSession, [], prepared.schema),
             id_col,
             vec_col,
             dim,

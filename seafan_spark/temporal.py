@@ -30,7 +30,7 @@ from pyspark.sql import types as T
 
 
 from seafan_spark.pipeline import as_df as _df  # shared unwrap contract
-from seafan_spark.session import _plan_literal
+from seafan_spark.session import _local_frame, _plan_literal
 
 
 def epoch_us_col(df: DataFrame, col: str) -> Column:
@@ -1561,7 +1561,8 @@ def _cox_ph_keyed(base, x_cols, keys, max_iter, tol):
         active = [g for g in groups if not converged[g] and g not in failed]
         if not active:
             break
-        brel = spark.createDataFrame(
+        brel = _local_frame(
+            spark,
             [(*g, *[float(b) for b in beta[g]]) for g in active], beta_schema
         )
         j = base.join(F.broadcast(brel), on=keys)  # inner: frozen groups drop out
@@ -1669,7 +1670,8 @@ def _cox_ph_keyed(base, x_cols, keys, max_iter, tol):
     # converged in different iterations)
     ok_groups = [g for g in groups if g not in failed]
     if ok_groups:
-        brel = spark.createDataFrame(
+        brel = _local_frame(
+            spark,
             [(*g, *[float(b) for b in beta[g]]) for g in ok_groups], beta_schema
         )
         j = base.join(F.broadcast(brel), on=keys)

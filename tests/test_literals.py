@@ -1,6 +1,6 @@
 """Plan literals (``session._plan_literal``): a driver-side list enters a
 plan as one constant. The value must equal the per-element ``F.lit`` form
-bit for bit, fail loudly when it does not fit its type, fold away before
+bit for bit, raise at the call when it does not fit its type, fold away before
 the query runs, and cost a fixed number of gateway calls whatever its
 size. A guard keeps per-element constant lists out of ``seafan_spark``."""
 
@@ -89,11 +89,18 @@ def test_dates_timestamps_and_decimals_match_per_element_lits(spark):
 
 @pytest.mark.parametrize(
     "value, ddl",
-    [([2**70], "array<bigint>"), ([1.5], "array<bigint>"), (["x"], "array<double>")],
+    [
+        ([2**70], "array<bigint>"),
+        ([1.5], "array<bigint>"),
+        (["x"], "array<double>"),
+        ([1], "array<double>"),
+        ([{"cell": 1, "cv": ["x"]}], "array<struct<cell:bigint,cv:array<double>>>"),
+    ],
 )
 def test_a_value_that_does_not_fit_raises(spark, value, ddl):
-    with pytest.raises(Exception):
-        _one(spark, _plan_literal(value, ddl))
+    # at the call, from createDataFrame's row check, not at collect time
+    with pytest.raises((TypeError, ValueError)):
+        _plan_literal(value, ddl)
 
 
 def test_the_parse_is_folded_before_the_query_runs(spark):
