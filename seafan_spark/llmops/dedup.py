@@ -1825,7 +1825,7 @@ def embedding_store_prepare(
     vector-store row. Normalization and bucketing happen ONCE here, at
     ingestion, so neither is ever recomputed for store rows on later
     batches (the embedding analogue of persisting minhash signatures)."""
-    from seafan_spark.llmops.similarity import norm_col, with_hyperplane_bucket
+    from seafan_spark.llmops.similarity import hyperplane_bucket_col, norm_col
 
     raw = df.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_raw"))
     # the norm is staged (computed once per row); a zero norm divides by 1
@@ -1833,10 +1833,10 @@ def embedding_store_prepare(
     # under the default ANSI mode
     staged = raw.select("_id", "_raw", norm_col(F.col("_raw")).alias("_n"))
     safe_n = F.when(F.col("_n") == 0.0, F.lit(1.0)).otherwise(F.col("_n"))
-    return with_hyperplane_bucket(staged, "_raw", "_bkt", dim, planes, seed).select(
+    return staged.select(
         "_id",
         F.transform(F.col("_raw"), lambda x: x.cast("double") / safe_n).alias("_v"),
-        "_bkt",
+        hyperplane_bucket_col(F.col("_raw"), dim, planes, seed).alias("_bkt"),
     )
 
 

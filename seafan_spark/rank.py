@@ -14,6 +14,37 @@ re-samples its bounds, which would silently mis-key the offsets.
 Used by diagnostics that need exact quantile buckets (decile/marginal —
 reference diags.go:354-473, 592-731) with NTILE-identical assignment, so
 the DuckDB oracle parity of the single-partition form is preserved.
+
+Carry-ins
+---------
+The per-partition carry-ins (row offsets, prefix sums, last values) enter
+the plan as ONE ``session._plan_literal`` array indexed by partition id,
+``element_at(carries, _gpid + 1)``, at every partition count. The array
+has an entry for every pid up to the largest, so every row's index is in
+range under ANSI. Catalyst folds it into one array constant, which
+generated code holds as a single reference however long it is; the lookup
+is O(1) per row and no broadcast build job runs. It replaced a literal
+``create_map`` (up to 64 partitions; 2P map children break codegen at
+production partition counts) and a broadcast join of the carry rows
+(above 64). Warm ``local[4]`` session on a 4-vCPU VM, sf0.01 lineitem
+ordered by (l_orderkey, l_linenumber), the three forms interleaved (12
+repeats at P=4, 6 at P=512, each form forced at both P), median CPU-s of
+the engine / Spark jobs per call:
+
+====================================  ============  ============  ============
+call                                  literal       map           join
+====================================  ============  ============  ============
+``global_row_number``, P=4            0.78 / 7      0.70 / 7      0.81 / 8
+``attach_running_ops``, P=4           1.00 / 8      1.23 / 8      1.45 / 9
+``decile`` query, P=4                 1.27 / 10     1.39 / 10     1.69 / 11
+``global_row_number``, P=512          11.78 / 7     12.35 / 7     11.91 / 8
+``attach_running_ops``, P=512         20.53 / 8     23.19 / 8     19.05 / 9
+``decile`` query, P=512               22.16 / 10    22.19 / 10    22.43 / 11
+====================================  ============  ============  ============
+
+Where the literal is slower, the gap lies inside the spread between
+repeats (interquartile ranges of 0.14-0.58 CPU-s at P=4, 0.8-2.5 at
+P=512), and the join always costs one job more.
 """
 
 from __future__ import annotations
@@ -21,24 +52,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from seafan_spark.session import _local_frame
+from seafan_spark.session import _plan_literal
 
 OrderKeys = list[tuple[str, bool]]  # (column, ascending)
-
-#: Above this many per-partition carry entries, the carry-ins ride back
-#: as a BROADCAST-JOINED stats relation instead of a literal create_map:
-#: a 2xP-child literal fails janino codegen at production partition
-#: counts (P = 10^4-10^5 at 100 TB — the round-10 range-bucket
-#: experiment measured ~10 s compile + interpreted fallback at ~255
-#: unrolled comparisons), and a literal-map probe is an O(P) linear
-#: scan per row where the hash join probe is O(1). BELOW the threshold
-#: the literal map wins: it needs no broadcast build job and no join
-#: stage per consumer action (measured +0.1-0.3 s per query at
-#: local[32] for the join form). The two forms attach value-identical
-#: typed carries; tests pin both regimes (test_round11_ops.py runs the
-#: substrate at spark.sql.shuffle.partitions=2048).
-CARRY_MAP_MAX = 64
-
 
 def _order_cols(order: OrderKeys) -> list[Column]:
     return [F.col(c).asc() if asc else F.col(c).desc() for c, asc in order]
@@ -82,29 +98,17 @@ def global_row_number(
     if not stats:
         return df.withColumn(out, F.lit(None).cast("long")), 0
     # One fused addend per partition: global rownum = _mid + (offset of
-    # earlier partitions - first _mid in this partition + 1). The carry
-    # attaches as a literal map at small partition counts and as a
-    # broadcast stats-join above CARRY_MAP_MAX (see its comment).
+    # earlier partitions - first _mid in this partition + 1), looked up
+    # in the dense carry array (see "Carry-ins" above).
+    adj: list[int | None] = [None] * (max(stats) + 1)
     acc = 0
-    rows: list[tuple[int, int]] = []
     for pid in sorted(stats):
         cnt, mn = stats[pid]
-        rows.append((pid, int(acc - mn + 1)))
+        adj[pid] = int(acc - mn + 1)
         acc += cnt
-    if len(rows) <= CARRY_MAP_MAX:
-        pairs: list[Column] = []
-        for pid, adj in rows:
-            pairs += [F.lit(pid), F.lit(adj)]
-        adj_col = F.create_map(*pairs)[F.col("_gpid")]
-    else:
-        offsets = _local_frame(
-            d.sparkSession,
-            rows, "_gpid int, _grn_adj long"
-        )
-        d = d.join(F.broadcast(offsets), "_gpid", "left")
-        adj_col = F.col("_grn_adj")
+    adj_col = F.element_at(_plan_literal(adj, "array<bigint>"), F.col("_gpid") + 1)
     d = d.withColumn(out, (F.col("_mid") + adj_col).cast("long"))
-    return d.drop("_gpid", "_mid", "_grn_adj"), total
+    return d.drop("_gpid", "_mid"), total
 
 
 def ntile_bucket_col(rank: Column, total: int, n_buckets: int) -> Column:
@@ -150,8 +154,8 @@ def attach_running_ops(
     the order keys, compute every request *within* each partition in one
     shared window pass, then stitch partitions together with driver-side
     carry-ins (one collected row per partition: counts, per-request sums,
-    per-request last values) shipped back as literal maps keyed by
-    partition id.
+    per-request last values) attached as one literal array indexed by
+    partition id (see "Carry-ins" above).
 
     ``requests`` entries are ``(out_name, kind, col)``:
 
@@ -205,110 +209,58 @@ def attach_running_ops(
     stats = {r["_gpid"]: r for r in stats_df.collect()}
     pids = sorted(stats)
 
-    # The per-partition carry-ins (a row per partition: row offset,
-    # per-request prefix sums / counts / last values) attach as literal
-    # map lookups at small partition counts and as ONE broadcast-joined
-    # stats relation above CARRY_MAP_MAX (see its comment) — same
-    # driver-side carry computation either way, value-identical typed
-    # literals, downstream expressions shared.
-    from pyspark.sql import types as T
-
-    carry_fields = [
-        T.StructField("_gpid", T.IntegerType(), False),
-        T.StructField("_aro_roff", T.LongType(), False),
-    ]
-    for name, kind, _col in requests:
-        if kind == "sum":
-            carry_fields.append(
-                T.StructField(f"_aro_soff_{name}", stat_types[f"{name}__tot"], True)
-            )
-            carry_fields.append(
-                T.StructField(f"_aro_scnt_{name}", T.LongType(), False)
-            )
-        elif kind == "lag":
-            vtype = next(
-                f.dataType
-                for f in stat_types[f"{name}__last"].fields
-                if f.name == "v"
-            )
-            carry_fields.append(T.StructField(f"_aro_prev_{name}", vtype, True))
-
-    # one pass per request kind over the sorted pids, exactly the carry
-    # recurrences the literal maps used to encode
-    carry_vals: dict[int, list] = {pid: [pid] for pid in pids}
+    # The carry-ins, one struct per partition id (see "Carry-ins" above):
+    # row offset, then per request the prefix sum and non-null count of
+    # the earlier partitions (sum) or the last row's value before this
+    # partition (lag). Fields are named by request position, so output
+    # names never have to be valid in the literal's type string.
+    fields = ["roff:bigint"]
+    carry = [{"roff": None} for _ in range(max(pids, default=-1) + 1)]
     acc = 0
     for pid in pids:
-        carry_vals[pid].append(acc)
+        carry[pid]["roff"] = acc
         acc += stats[pid]["_cnt"]
-    for name, kind, _col in requests:
+    for i, (name, kind, _col) in enumerate(requests):
         if kind == "sum":
+            fields += [f"s{i}:{stat_types[f'{name}__tot'].simpleString()}", f"c{i}:bigint"]
             s_acc, c_acc = None, 0
             for pid in pids:
-                carry_vals[pid].append(s_acc)
-                carry_vals[pid].append(c_acc)
+                carry[pid][f"s{i}"], carry[pid][f"c{i}"] = s_acc, c_acc
                 tot = stats[pid][f"{name}__tot"]
                 if tot is not None:
                     s_acc = tot if s_acc is None else s_acc + tot
                 c_acc += stats[pid][f"{name}__cnt"]
         elif kind == "lag":
+            vtype = stat_types[f"{name}__last"]["v"].dataType
+            fields.append(f"p{i}:{vtype.simpleString()}")
             prev = None
             for pid in pids:
-                carry_vals[pid].append(prev[0] if prev is not None else None)
+                carry[pid][f"p{i}"] = prev
                 last = stats[pid][f"{name}__last"]
-                if last is not None:  # non-empty partition
-                    prev = (last["v"],)
-    if len(pids) <= CARRY_MAP_MAX:
-        attach_carry: dict[str, Column] = {}
-        for fi, field in enumerate(carry_fields):
-            if field.name == "_gpid":
-                continue
-            pairs: list[Column] = []
-            for pid in pids:
-                v = carry_vals[pid][fi]
-                # None carries can't ride a literal map — omitting them
-                # is equivalent (missing key looks up NULL, the carry)
-                if v is not None:
-                    pairs += [F.lit(pid), F.lit(v)]
-            attach_carry[field.name] = (
-                F.create_map(*pairs)[F.col("_gpid")]
-                if pairs
-                else F.lit(None).cast(field.dataType)
-            )
-        d = d.withColumns(attach_carry)
-    else:
-        carry = _local_frame(
-            d.sparkSession,
-            [tuple(carry_vals[pid]) for pid in pids], T.StructType(carry_fields)
-        )
-        d = d.join(F.broadcast(carry), "_gpid", "left")
+                if last is not None:  # non-empty partition; structs as dicts
+                    prev = last.asDict(recursive=True)["v"]
+    carries = _plan_literal(carry, f"array<struct<{','.join(fields)}>>")
+    d = d.withColumn("_aro_c", F.element_at(carries, F.col("_gpid") + 1))
 
     out_cols: dict[str, Column] = {}
-    drop = ["_gpid", "_lrn", "_aro_roff"]
-    for name, kind, col in requests:
+    drop = ["_gpid", "_lrn", "_aro_c"]
+    for i, (name, kind, col) in enumerate(requests):
         if kind == "rownum":
-            off = F.coalesce(F.col("_aro_roff"), F.lit(0))
-            out_cols[name] = (F.col("_lrn") + off).cast("long")
+            out_cols[name] = (F.col("_lrn") + F.col("_aro_c.roff")).cast("long")
         elif kind == "sum":
-            drop += [
-                f"{name}__wb",
-                f"{name}__wbc",
-                f"_aro_soff_{name}",
-                f"_aro_scnt_{name}",
-            ]
+            drop += [f"{name}__wb", f"{name}__wbc"]
             zero = F.lit(0).cast(stat_types[f"{name}__tot"].simpleString())
-            seen = F.coalesce(F.col(f"_aro_scnt_{name}"), F.lit(0)) + F.col(
-                f"{name}__wbc"
-            )
-            total = F.coalesce(F.col(f"_aro_soff_{name}"), zero) + F.coalesce(
+            seen = F.col(f"_aro_c.c{i}") + F.col(f"{name}__wbc")
+            total = F.coalesce(F.col(f"_aro_c.s{i}"), zero) + F.coalesce(
                 F.col(f"{name}__wb"), zero
             )
             # NULL until the first non-null contribution — SQL running-sum
             # semantics (no otherwise: WHEN without ELSE yields NULL)
             out_cols[name] = F.when(seen > 0, total)
         elif kind == "lag":
-            drop += [f"{name}__wb", f"_aro_prev_{name}"]
+            drop.append(f"{name}__wb")
             out_cols[name] = F.when(F.col("_lrn") > 1, F.col(f"{name}__wb")).otherwise(
-                F.col(f"_aro_prev_{name}")
+                F.col(f"_aro_c.p{i}")
             )
     d = d.withColumns(out_cols)
     return d.drop(*drop)

@@ -54,6 +54,16 @@ checks the value against the type with ``createDataFrame``'s row check
 (0.16 s for a 4096 x 64 centroid table, against 0.35 s for its
 ``json.dumps``), so a value that does not fit raises at the call.
 
+The text is written by type. ``from_json`` reads a ``timestamp_ntz`` only
+as wall-clock ISO text with no offset and a ``binary`` only as base64, so
+a value whose type holds either is rewritten into that text first. The
+parsed (cached) type says whether it does; values of other types (double,
+string and centroid arrays) go to ``json.dumps`` untouched, at no extra
+cost. ``rank``'s per-partition carries (row offsets, sums, lagged values
+of any column type) and ``llmops.similarity``'s projection and hyperplane
+weights enter their plans this way at every size; no size threshold
+switches either to a broadcast join.
+
 Local frames
 ------------
 ``spark.createDataFrame(list_of_rows, schema)`` parallelizes the rows
@@ -80,6 +90,7 @@ interpreter instead of run through generated code as a scan's are.
 
 from __future__ import annotations
 
+import base64
 import datetime
 import decimal
 import functools
@@ -93,7 +104,11 @@ from pyspark import TaskContext
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
+    ArrayType,
+    BinaryType,
+    MapType,
     StructType,
+    TimestampNTZType,
     _create_converter,
     _make_type_verifier,
     _parse_datatype_string,
@@ -176,11 +191,37 @@ def _json_scalar(v):
     raise TypeError(f"_plan_literal: cannot encode {type(v).__name__} {v!r}")
 
 
+def _text_encoder(dtype):
+    """A function that rewrites the ``timestamp_ntz`` and ``binary`` values
+    inside a value of ``dtype`` as the text ``from_json`` reads for them
+    (wall-clock ISO with no offset; base64), or None when ``dtype`` holds
+    neither and ``json.dumps`` can take the value as it is."""
+    if isinstance(dtype, TimestampNTZType):
+        return lambda v: None if v is None else v.replace(tzinfo=None).isoformat()
+    if isinstance(dtype, BinaryType):
+        return lambda v: None if v is None else base64.b64encode(bytes(v)).decode("ascii")
+    if isinstance(dtype, ArrayType):
+        enc = _text_encoder(dtype.elementType)
+        return enc and (lambda v: None if v is None else [enc(x) for x in v])
+    if isinstance(dtype, MapType):
+        enc = _text_encoder(dtype.valueType)
+        return enc and (lambda v: None if v is None else {k: enc(x) for k, x in v.items()})
+    if isinstance(dtype, StructType):
+        encs = {f.name: _text_encoder(f.dataType) for f in dtype.fields}
+        if not any(encs.values()):
+            return None
+        return lambda v: None if v is None else {
+            k: encs[k](x) if encs.get(k) else x for k, x in v.items()
+        }
+    return None
+
+
 @functools.lru_cache(maxsize=256)
 def _literal_check(ddl_type: str):
     # parsed once per type: the parse is a JVM round trip (~3.5 ms), and
     # queries rebuilt pass after pass ask for the same few types
-    return _make_type_verifier(_parse_datatype_string(ddl_type), name="_plan_literal")
+    dtype = _parse_datatype_string(ddl_type)
+    return _make_type_verifier(dtype, name="_plan_literal"), _text_encoder(dtype)
 
 
 def _plan_literal(value, ddl_type: str) -> Column:
@@ -191,13 +232,16 @@ def _plan_literal(value, ddl_type: str) -> Column:
 
     Floats round-trip exactly (``json`` writes ``repr``; NaN and ±inf
     go through as ``NaN``/``Infinity``), dates, datetimes and decimals go
-    through as text, and ``None`` elements stay NULL.
+    through as text, ``bytes`` as base64, and ``None`` elements stay NULL.
+    A ``timestamp`` datetime is an instant (a naive one is local time); a
+    ``timestamp_ntz`` one keeps its wall-clock fields.
     A value that does not fit the type (2**70 as ``bigint``, a string or
     an ``int`` as ``double``) raises ``TypeError``/``ValueError`` here,
     from the row check :func:`_local_frame` and ``createDataFrame`` run,
     instead of failing the query later."""
-    _literal_check(ddl_type)(value)
-    text = json.dumps(value, default=_json_scalar)
+    check, encode = _literal_check(ddl_type)
+    check(value)
+    text = json.dumps(encode(value) if encode else value, default=_json_scalar)
     return F.from_json(F.lit(text), ddl_type, {"mode": "FAILFAST"})
 
 

@@ -5,6 +5,8 @@ the query runs, and cost a fixed number of gateway calls whatever its
 size. A guard keeps per-element constant lists out of ``seafan_spark``."""
 
 import ast
+import datetime
+import decimal
 import gc
 import math
 import pathlib
@@ -74,17 +76,43 @@ def test_nested_and_struct_types(spark):
     ]
 
 
-def test_dates_timestamps_and_decimals_match_per_element_lits(spark):
-    import datetime
-    import decimal
+_NTZ = [
+    datetime.datetime(2021, 3, 4, 5, 6, 7, 890123),
+    datetime.datetime(2021, 3, 14, 2, 30),  # not a New York wall time
+    None,
+]
 
+
+def test_dates_timestamps_and_decimals_match_per_element_lits(spark):
     for vals, ddl in [
         ([datetime.date(2020, 2, 29), None], "array<date>"),
         ([datetime.datetime(2021, 3, 4, 5, 6, 7, 890123)], "array<timestamp>"),
         ([decimal.Decimal("-12345678.90"), decimal.Decimal("0.01")], "array<decimal(10,2)>"),
+        (_NTZ, "array<timestamp_ntz>"),
+        ([b"ab\x00\xff", b"", None, bytes(range(256))], "array<binary>"),
     ]:
         ref = _one(spark, F.array(*[F.lit(v).cast(ddl[6:-1]) for v in vals]))
         assert _one(spark, _plan_literal(vals, ddl)) == ref == vals
+
+
+def test_timestamp_ntz_keeps_wall_clock_in_any_local_zone(spark, monkeypatch):
+    import time
+
+    # a naive datetime is wall-clock time for timestamp_ntz: the local
+    # zone must not shift it, even across a daylight-saving gap
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    try:
+        got = _one(spark, _plan_literal(_NTZ, "array<timestamp_ntz>"))
+        nested = _one(
+            spark,
+            _plan_literal([{"t": _NTZ[0], "b": b"\x01"}], "array<struct<t:timestamp_ntz,b:binary>>"),
+        )
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+    assert got == _NTZ
+    assert nested[0].asDict() == {"t": _NTZ[0], "b": bytearray(b"\x01")}
 
 
 @pytest.mark.parametrize(

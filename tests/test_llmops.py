@@ -743,47 +743,39 @@ def test_vector_dim_guards(spark):
         infer_vec_dim(empty, "embedding", "ann_lsh_topk")
 
 
-def test_projection_broadcast_weights_match_literals(spark):
+def test_projection_and_buckets_match_numpy_at_1024_dims(spark):
     import random as _rnd
 
+    import numpy as np
     from pyspark.sql import functions as F
 
     from seafan_spark.llmops.similarity import (
+        hyperplane_bucket_col,
+        hyperplane_weights,
+        jl_sign_weights,
         random_projection_col,
-        with_hyperplane_bucket,
-        with_random_projection,
     )
 
+    # 1024 x 32 weights: well past any plan-literal size that matters,
+    # still one folded literal per weight row
     rnd = _rnd.Random(3)
-    in_dim, out_dim = 1024, 32  # 32768 weights > LITERAL_WEIGHT_MAX
+    in_dim, out_dim, planes = 1024, 32, 32
     rows = [(i, [rnd.gauss(0, 1) for _ in range(in_dim)]) for i in range(6)]
     df = spark.createDataFrame(rows, "i long, v array<double>")
     got = {
-        r["i"]: r["p"]
-        for r in with_random_projection(df, "v", "p", in_dim, out_dim).collect()
-    }
-    ref = {
-        r["i"]: r["p"]
+        r["i"]: (r["p"], r["b"])
         for r in df.select(
-            "i", random_projection_col(F.col("v"), in_dim, out_dim).alias("p")
+            "i",
+            random_projection_col(F.col("v"), in_dim, out_dim).alias("p"),
+            hyperplane_bucket_col(F.col("v"), in_dim, planes=planes).alias("b"),
         ).collect()
     }
-    for i in got:
-        assert got[i] == pytest.approx(ref[i])
-    # hyperplane buckets: broadcast path reproduces the literal weights too
-    from seafan_spark.llmops.similarity import hyperplane_bucket_col
-
-    bk = {
-        r["i"]: r["b"]
-        for r in with_hyperplane_bucket(df, "v", "b", in_dim, planes=32).collect()
-    }
-    bref = {
-        r["i"]: r["b"]
-        for r in df.select(
-            "i", hyperplane_bucket_col(F.col("v"), in_dim, planes=32).alias("b")
-        ).collect()
-    }
-    assert bk == bref
+    jl = np.array(jl_sign_weights(in_dim, out_dim))
+    hp = np.array(hyperplane_weights(planes, in_dim))
+    for i, v in rows:
+        p, b = got[i]
+        assert p == pytest.approx(list(jl @ np.array(v) / out_dim ** 0.5))
+        assert b == "".join("1" if x >= 0 else "0" for x in hp @ np.array(v))
 
 
 def test_chunk_documents_boundaries(spark):

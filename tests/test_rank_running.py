@@ -68,6 +68,81 @@ def test_running_ops_empty(spark):
     assert out.count() == 0 and {"rn", "s"} <= set(out.columns)
 
 
+@pytest.fixture()
+def seams(spark):
+    # 8 range partitions with coalescing off, so every carry crosses seams
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    old_co = spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled")
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    yield spark
+    spark.conf.set("spark.sql.shuffle.partitions", old)
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", old_co)
+
+
+def _typed(spark):
+    import datetime
+    import decimal
+
+    t0 = datetime.datetime(2020, 3, 8, 1, 15)
+    rows = []
+    for i in range(48):
+        null = i % 5 == 2 or i % 6 == 5  # NULLs land at and beside seams
+        lead = i < 9  # the sums stay NULL through the first partition
+        rows.append((
+            i,
+            None if null else bytes([i, 255 - i, 0]),
+            None if null else t0 + datetime.timedelta(minutes=47 * i, microseconds=i),
+            None if null else t0 + datetime.timedelta(hours=5 * i, microseconds=3 * i),
+            None if null else datetime.date(2020, 2, 27) + datetime.timedelta(days=i),
+            None if null else decimal.Decimal(i * 37 % 200 - 100) / 8,
+            None if null else i % 3 == 0,
+            None if null else f"ü{i}",
+            None if lead or null else decimal.Decimal(i * 53 % 300 - 150) / 4,
+            None if lead or null else (i * 29 % 17 - 8) * 0.25,
+        ))
+    return spark.createDataFrame(
+        rows,
+        "k long, bin binary, ntz timestamp_ntz, ts timestamp, d date, "
+        "dec decimal(10,2), b boolean, s string, sdec decimal(10,2), sdbl double",
+    ).repartition(5)
+
+
+@pytest.mark.parametrize(
+    "case",
+    ["bin", "ntz", "ts", "d", "dec", "b", "s", "sum:sdec", "sum:sdbl",
+     "global_row_number", "ntile_exact"],
+)
+def test_carries_of_every_type_match_the_window(seams, case):
+    from seafan_spark.rank import global_row_number, ntile_exact
+
+    df = _typed(seams)
+    w = Window.orderBy("k")
+    if case == "global_row_number":
+        d, total = global_row_number(df, [("k", True)], "x")
+        ref = F.row_number().over(w)
+    elif case == "ntile_exact":
+        d, total = ntile_exact(df, [("k", True)], 7, "x")
+        ref = F.ntile(7).over(w)
+    else:
+        kind, _, c = case.rpartition(":")
+        col = F.col(c)
+        d = attach_running_ops(
+            df, [("k", True)], [("rn", "rownum", None), ("x", kind or "lag", col)]
+        )
+        total = 48
+        ref = (
+            F.sum(col).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
+            if kind
+            else F.lag(col, 1).over(w)
+        )
+    got = d.select("k", "x").orderBy("k").collect()
+    exp = df.select("k", ref.alias("x")).orderBy("k").collect()
+    assert total == 48 and got == exp
+    if ":" not in case and case in df.columns:  # a lag keeps its type
+        assert d.schema["x"].dataType == df.schema[case].dataType
+
+
 def test_spread_skips_already_repartitioned(spark):
     from seafan_spark.partitions import spread_if_narrow
 

@@ -1,12 +1,16 @@
 """Round-11 optimization pins.
 
-The rank substrate's per-partition carry-ins ride back as a broadcast
-stats-join, never a literal create_map (a 2xP-child literal fails janino
-codegen at production partition counts). These tests pin (a) value
-equality against the single-partition window reference at an
-artificially HIGH shuffle-partition count, and (b) the plan shape:
-no create_map anywhere in the substrate's physical plan.
+The rank substrate's per-partition carry-ins attach as one folded array
+literal indexed by partition id, at every partition count: never a
+literal create_map (a 2xP-child map fails janino codegen at production
+partition counts) and never a broadcast join (one job more per call).
+These tests pin (a) value equality against the single-partition window
+reference at an artificially HIGH shuffle-partition count, (b) the plan
+shape, and (c) the job count, which must not grow with the partition
+count.
 """
+
+import uuid
 
 import pytest
 from pyspark.sql import Window
@@ -87,18 +91,63 @@ def test_ntile_exact_high_partition_count(high_partitions):
 
 
 def test_rank_substrate_plan_has_no_literal_map_at_scale(high_partitions):
-    # plan-shape insurance: above CARRY_MAP_MAX partitions the carries
-    # attach via a broadcast hash join, never a map literal whose child
-    # count grows with the partition count (janino fails ~10^4 children)
+    # plan-shape insurance: at 2048 partitions the carries are one folded
+    # array constant, not a map literal whose child count grows with the
+    # partition count (janino fails ~10^4 children), not a broadcast join,
+    # and no JSON parse is left for the rows to run
     df = _seamy(high_partitions)
     d, _ = global_row_number(df, [("k", True)], "rn")
-    plan = d._jdf.queryExecution().executedPlan().toString()
-    assert "create_map" not in plan.lower()
-    assert "BroadcastHashJoin" in plan
-
     d2 = attach_running_ops(
         df, [("k", True)], [("s", "sum", F.col("v")), ("l", "lag", F.col("v"))]
     )
-    plan2 = d2._jdf.queryExecution().executedPlan().toString()
-    assert "create_map" not in plan2.lower()
-    assert "BroadcastHashJoin" in plan2
+    for frame in (d, d2):
+        qe = frame._jdf.queryExecution()
+        optimized = qe.optimizedPlan().toString().lower()
+        executed = qe.executedPlan().toString().lower()
+        assert "create_map" not in executed and "broadcast" not in executed, executed
+        assert "from_json" not in optimized and "jsontostructs" not in optimized, optimized
+        assert "element_at" in optimized, optimized
+
+
+def _jobs(spark, build):
+    """Spark jobs launched by ``build()`` and collecting what it returns,
+    counted through the status tracker."""
+    sc = spark.sparkContext
+    group = uuid.uuid4().hex
+    sc.setJobGroup(group, "rank substrate jobs")
+    try:
+        build().collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_rank_substrate_jobs_do_not_grow_with_partition_count(spark):
+    def counts():
+        df = _seamy(spark)
+        return (
+            _jobs(spark, lambda: global_row_number(df, [("k", True)], "rn")[0]),
+            _jobs(
+                spark,
+                lambda: attach_running_ops(
+                    df,
+                    [("k", True)],
+                    [("rn", "rownum", None), ("s", "sum", F.col("v")),
+                     ("l", "lag", F.col("v"))],
+                ),
+            ),
+        )
+
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    old_co = spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled")
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    try:
+        spark.conf.set("spark.sql.shuffle.partitions", "4")
+        few = counts()
+        spark.conf.set("spark.sql.shuffle.partitions", "2048")
+        many = counts()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", old_co)
+    assert few == many, (few, many)
