@@ -1646,10 +1646,10 @@ def q_model_glm(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_model_nn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-architecture NN trainer (optim.fit_nn): learned embedding +
-    leakyrelu hidden layer + dropout, cross-entropy cost, distributed
-    backprop via one mapInPandas pass per iteration + driver Adam
-    (nn.go:598-840 re-expressed Spark-first). Optimizer output —
-    rows-only check."""
+    leakyrelu hidden layer + dropout, cross-entropy cost, backprop in
+    mapInPandas with Adam (nn.go:598-840 re-expressed Spark-first): the
+    whole fit in one task up to 25k rows, one pass per iteration above.
+    Optimizer output — rows-only check."""
     from seafan_spark.encode import append_cat, make_one_hot
     from seafan_spark.model import add_fitted, fit, parse_modspec
 

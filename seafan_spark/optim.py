@@ -29,14 +29,16 @@ from seafan_spark.pipeline import Pipeline
 
 
 def _iteration_layout(data_ck: DataFrame, nrows: int) -> tuple[DataFrame, DataFrame, int]:
-    """Right-size iteration parallelism for a checkpointed training frame:
+    """Right-size training parallelism for a checkpointed training frame:
     target ~25k rows/task. Over-partitioned inputs coalesce (narrow, no
-    shuffle); UNDER-partitioned inputs — a single-split source leaves the
-    checkpoint with one partition, which serializes EVERY gradient pass
-    of the whole training loop onto one task (measured: that was the
+    shuffle). At one partition (up to 25k rows) :func:`fit_nn` runs the
+    whole fit in that one task. Above it, every iteration is one pass
+    over ``nparts`` tasks, so UNDER-partitioned inputs — a single-split
+    source leaves the checkpoint with one partition, which would
+    serialize every gradient pass onto one task (measured: that was the
     entire model_nn cost at sf0.1, 12 serial 150k-row passes) — pay one
     round-robin shuffle + re-checkpoint at build time so the loop's
-    passes run wide. Returns (checkpoint handle, iteration frame, nparts).
+    passes run wide. Returns (checkpoint handle, training frame, nparts).
     """
     nparts = max(1, -(-nrows // 25_000))
     cur = data_ck.rdd.getNumPartitions()
@@ -57,31 +59,40 @@ def _iteration_layout(data_ck: DataFrame, nrows: int) -> tuple[DataFrame, DataFr
 # layers, softmax or linear head, and fits with Adam + early stopping +
 # NaN-restart (nn.go:598-840). fit_nn reproduces that surface Spark-first:
 #
-# - forward + backprop run INSIDE one Arrow ``mapInPandas`` pass per
-#   iteration (blocked numpy matmuls per partition); each partition emits
-#   one row of flattened gradient partials; the driver sums ~numPartitions
-#   rows and applies Adam. Nothing row-at-a-time, nothing collected but
-#   the O(params) gradient.
+# - forward + backprop run in an Arrow ``mapInPandas`` partition function
+#   (blocked numpy matmuls per batch) that sums one row of flattened
+#   gradient partials per partition. The Adam loop (``_adam_loop``) sums
+#   those rows, wherever the layout puts it: at one partition, inside the
+#   one task that holds the rows; above that, on the driver, one pass per
+#   iteration. Nothing row-at-a-time, nothing collected but O(params)
+#   gradients or, from the one-task fit, O(params + iterations).
 # - dropout masks are seeded by (seed, iteration, partitionId): training is
 #   deterministic for a fixed partitioning, and the SoftRMS two-pass (below)
 #   sees identical masks in both passes.
 # - ``batch_frac`` < 1 emulates the reference's minibatch epochs: each
 #   iteration Bernoulli-samples rows partition-locally with the same seeded
-#   RNG — still exactly one distributed pass per iteration.
+#   RNG — still exactly one gradient sum per iteration.
 # - costs (nn.go CostFns): 'ce' cross-entropy; 'rms' (descends MSE, reports
 #   RMS — same argmin); 'softrms' per-class RMS (nn.go:555-573). SoftRMS is
 #   NOT separable per-row (the 1/L_i factors are global), so it runs a
 #   cheap forward-only pass for the per-class sums, then the gradient pass
 #   with 1/(N*L_i) folded into the output delta — two passes, still exact.
 #
-# Per-iteration cost: one (or two) map passes over the localCheckpointed
-# feature columns + a tiny driver reduce. The weights ride in the pickled
-# pass function (no broadcast), so driver state and each task's payload are
-# O(total parameters). On small inputs a pass is almost all fixed cost: a
-# no-op Python pass over 10 rows costs 0.10-0.16 CPU-s on a 4-vCPU VM once
-# the worker's zip finders are swept (session.py, "Python-task floor";
-# ~0.4 s before), while the pass function itself takes ~0.02 CPU-s over
-# seafan_model's 15k rows.
+# Cost per fit: ``_iteration_layout`` puts the localCheckpointed feature
+# columns on ~25k rows per task. Up to 25k rows that is one partition, and
+# the whole fit is ONE Spark job: one ``mapInPandas`` task keeps the
+# partition's Arrow batches, runs every iteration over them and yields the
+# best weights and the loss history. It sees the batches a per-iteration
+# pass would see and draws the same ``(seed, it, 0)`` masks, so its
+# weights and history are bit-identical to the per-pass loop's. This
+# matters because a pass is almost all fixed cost: a no-op Python pass
+# over 10 rows costs 0.10-0.16 CPU-s on a 4-vCPU VM (session.py,
+# "Python-task floor"), while the pass function itself takes ~0.02 CPU-s
+# over seafan_model's 15k rows. Above 25k rows every iteration is one (or,
+# for SoftRMS, two) map passes over ``nparts`` tasks plus a tiny driver
+# reduce, tree-merged in the JVM above ``_TREE_MERGE_MIN_PARTS`` tasks.
+# The weights ride in the pickled function (no broadcast), so driver
+# state and each task's payload are O(total parameters).
 
 
 @dataclass
@@ -425,6 +436,128 @@ def _tree_merge_gradients(
     )
 
 
+def _sum_partials(rows, mode: str, nparam: int, C: int):
+    """Sum per-partition ``(g, ls, n)`` rows (Spark ``Row``s or dicts) into
+    one gradient, loss-partial vector and row count, in row order."""
+    g = np.zeros(nparam) if mode != "_fwd_ss" else None
+    ls = np.zeros(max(C, 1))
+    n = 0
+    for row in rows:
+        if mode != "_fwd_ss":
+            g += np.array(row["g"])
+        ls += np.array(row["ls"])
+        n += int(row["n"])
+    return g, ls, n
+
+
+def _adam_loop(
+    grad, wflat: np.ndarray, cost: str, C: int, max_iter: int, lr: float,
+    patience: int, tol: float,
+) -> tuple[np.ndarray, list[float]]:
+    """The training loop (Adam, patience, NaN restart, SoftRMS's two
+    passes) over a gradient source ``grad(it, mode, lw, w) -> (g, ls, n)``
+    that sums :func:`_nn_partial` over the training rows. Returns the best
+    weights and the per-iteration loss history; where ``grad`` runs is
+    the caller's choice (see :func:`fit_nn`)."""
+    best_w, best_loss, since_best = wflat.copy(), float("inf"), 0
+    m = np.zeros_like(wflat)
+    v = np.zeros_like(wflat)
+    b1, b2, eps = 0.9, 0.999, 1e-8
+    history: list[float] = []
+    t = 0
+    it = 0
+    cur_lr = lr
+    while it < max_iter:
+        it += 1
+        if cost == "softrms":
+            _, ss, n = grad(it, "_fwd_ss", None, wflat)
+            L_i = np.sqrt(ss / max(n, 1))
+            loss = float(L_i[1:].sum())
+            lw = np.zeros(C)
+            nz = L_i > 0
+            lw[nz] = 1.0 / (max(n, 1) * L_i[nz])
+            lw[0] = 0.0
+            g, _, _ = grad(it, "softrms", lw[None, :], wflat)
+        else:
+            g, ls, n = grad(it, cost, None, wflat)
+            if cost == "ce":
+                loss = float(ls[0] / max(n, 1))  # mean NLL
+            else:
+                loss = float(np.sqrt(ls[0] / max(n, 1)))  # RMS
+            g = g / max(n, 1)
+        if not np.isfinite(loss) or not np.all(np.isfinite(g)):
+            # NaN restart (nn.go:772-800): rewind to best, halve the rate,
+            # reset patience (post-restart loss ~= best loss must not trip
+            # early stopping on the next iteration)
+            wflat = best_w.copy()
+            m, v, t = np.zeros_like(wflat), np.zeros_like(wflat), 0
+            since_best = 0
+            cur_lr *= 0.5
+            if cur_lr < 1e-8:
+                break
+            continue
+        history.append(loss)
+        if loss < best_loss - tol:
+            best_loss, best_w, since_best = loss, wflat.copy(), 0
+        else:
+            since_best += 1
+            if since_best >= patience:
+                break
+        t += 1
+        m = b1 * m + (1 - b1) * g
+        v = b2 * v + (1 - b2) * g * g
+        mh = m / (1 - b1**t)
+        vh = v / (1 - b2**t)
+        wflat = wflat - cur_lr * mh / (np.sqrt(vh) + eps)
+    return best_w, history
+
+
+_NN_FIT_OUT = T.StructType(
+    [
+        T.StructField("w", T.ArrayType(T.DoubleType())),
+        T.StructField("history", T.ArrayType(T.DoubleType())),
+    ]
+)
+
+
+def _nn_fit_task(
+    blocks: list[_Block],
+    shapes,
+    acts: list[tuple[str, float]],
+    head: str,
+    C: int,
+    dropouts: list[float],
+    seed: int,
+    batch_frac: float,
+    wflat: np.ndarray,
+    loop: dict,
+):
+    """Build the mapInPandas function that runs a whole one-shard fit in
+    its task: it holds the partition's Arrow batches and runs
+    :func:`_adam_loop` over them, calling the :func:`_nn_partial` function
+    a per-iteration pass would ship. Same batches, same ``(seed, it, 0)``
+    draws, same sums, so the same weights and history. Yields one row:
+    the best weights and the loss history."""
+
+    def fit_part(batches):
+        _drop_zip_importers()
+        import pandas as pd
+
+        held = list(batches)
+
+        def grad(it, mode, lw, w):
+            pf = _nn_partial(
+                blocks, shapes, acts, head, C, mode, dropouts, seed, it, batch_frac, w, lw
+            )
+            rows = (row for pdf in pf(held) for row in pdf.to_dict("records"))
+            return _sum_partials(rows, mode, w.shape[0], C)
+
+        best_w, history = _adam_loop(grad, wflat, **loop)
+        yield pd.DataFrame({"w": [best_w.tolist()], "history": [history]})
+
+    return fit_part
+
+
 def fit_nn(
     pipe: Pipeline,
     ms,
@@ -438,9 +571,12 @@ def fit_nn(
 ) -> NNModel:
     """Fit the full ModSpec architecture (embeddings, FC stack, dropout)
     under ``cost`` in {'ce','rms','softrms'} — the reference's gorgonia
-    trainer (nn.go:598-840) re-expressed as one distributed gradient pass
-    per iteration + driver Adam. See the module-section comment for the
-    exact mapping and the SoftRMS two-pass.
+    trainer (nn.go:598-840) re-expressed Spark-first. Up to 25k rows the
+    training frame is one partition and the whole Adam loop runs in its
+    one task (one Spark job per fit); above that, each iteration is one
+    distributed gradient pass plus a driver Adam step. Both give the
+    same weights for the same partitioning. See the module-section
+    comment for the exact mapping and the SoftRMS two-pass.
     """
     from seafan_spark.ftypes import FRole
     from seafan_spark.model import ModSpecError, _label_col, modspec_inputs
@@ -489,9 +625,9 @@ def fit_nn(
         F.col(label).cast("double").alias("_l"),
     ).localCheckpoint(eager=True)
     data = data_ck
-    # Right-size iteration parallelism (see _iteration_layout): ~25k
-    # rows/task — coalesce over-partitioned inputs, respread
-    # under-partitioned ones once so the loop's passes run wide.
+    # Right-size training parallelism (see _iteration_layout): ~25k
+    # rows/task — one partition trains in one task; above that,
+    # under-partitioned inputs are respread once so the passes run wide.
     nrows = data.count()
     data_ck, data, nparts = _iteration_layout(data_ck, nrows)
 
@@ -503,79 +639,25 @@ def fit_nn(
         w0.append(rng.uniform(-lim, lim, size=r * c))
     wflat = np.concatenate(w0)
 
-    def run_pass(it: int, mode: str, lw: np.ndarray | None):
+    def pass_grad(it: int, mode: str, lw: np.ndarray | None, w: np.ndarray):
         pf = _nn_partial(
-            blocks, shapes, acts, head, C, mode, dropouts, seed, it, batch_frac,
-            wflat, lw,
+            blocks, shapes, acts, head, C, mode, dropouts, seed, it, batch_frac, w, lw
         )
         mapped = data.mapInPandas(pf, schema=_NN_OUT)
         if nparts > _TREE_MERGE_MIN_PARTS:
-            mapped = _tree_merge_gradients(
-                mapped, [("g", wflat.shape[0]), ("ls", max(C, 1))]
-            )
-        rows = mapped.collect()
-        g = np.zeros(wflat.shape[0]) if mode != "_fwd_ss" else None
-        ls = np.zeros(max(C, 1))
-        n = 0
-        for row in rows:
-            if mode != "_fwd_ss":
-                g += np.array(row["g"])
-            ls += np.array(row["ls"])
-            n += row["n"]
-        return g, ls, n
+            mapped = _tree_merge_gradients(mapped, [("g", w.shape[0]), ("ls", max(C, 1))])
+        return _sum_partials(mapped.collect(), mode, w.shape[0], C)
 
-    best_w, best_loss, since_best = wflat.copy(), float("inf"), 0
-    m = np.zeros_like(wflat)
-    v = np.zeros_like(wflat)
-    b1, b2, eps = 0.9, 0.999, 1e-8
-    history: list[float] = []
-    t = 0
-    it = 0
-    cur_lr = lr
+    loop = dict(cost=cost, C=C, max_iter=max_iter, lr=lr, patience=patience, tol=tol)
     try:
-        while it < max_iter:
-            it += 1
-            if cost == "softrms":
-                _, ss, n = run_pass(it, "_fwd_ss", None)
-                L_i = np.sqrt(ss / max(n, 1))
-                loss = float(L_i[1:].sum())
-                lw = np.zeros(C)
-                nz = L_i > 0
-                lw[nz] = 1.0 / (max(n, 1) * L_i[nz])
-                lw[0] = 0.0
-                g, _, _ = run_pass(it, "softrms", lw[None, :])
-            else:
-                g, ls, n = run_pass(it, cost, None)
-                if cost == "ce":
-                    loss = float(ls[0] / max(n, 1))  # mean NLL
-                else:
-                    loss = float(np.sqrt(ls[0] / max(n, 1)))  # RMS
-                g = g / max(n, 1)
-            if not np.isfinite(loss) or not np.all(np.isfinite(g)):
-                # NaN restart (nn.go:772-800): rewind to best, halve the rate,
-                # reset patience (post-restart loss ~= best loss must not trip
-                # early stopping on the next iteration)
-                wflat = best_w.copy()
-                m, v, t = np.zeros_like(wflat), np.zeros_like(wflat), 0
-                since_best = 0
-                cur_lr *= 0.5
-                if cur_lr < 1e-8:
-                    break
-                continue
-            history.append(loss)
-            if loss < best_loss - tol:
-                best_loss, best_w, since_best = loss, wflat.copy(), 0
-            else:
-                since_best += 1
-                if since_best >= patience:
-                    break
-            t += 1
-            m = b1 * m + (1 - b1) * g
-            v = b2 * v + (1 - b2) * g * g
-            mh = m / (1 - b1**t)
-            vh = v / (1 - b2**t)
-            wflat = wflat - cur_lr * mh / (np.sqrt(vh) + eps)
-
+        if nparts == 1:
+            fit_fn = _nn_fit_task(
+                blocks, shapes, acts, head, C, dropouts, seed, batch_frac, wflat, loop
+            )
+            (row,) = data.mapInPandas(fit_fn, schema=_NN_FIT_OUT).collect()
+            best_w, history = np.array(row["w"]), list(row["history"])
+        else:
+            best_w, history = _adam_loop(pass_grad, wflat, **loop)
     finally:
         # the checkpointed training frame is trainer scratch — NNModel is
         # driver-side weights; free its blocks so back-to-back fits in one

@@ -55,14 +55,16 @@ checks the value against the type with ``createDataFrame``'s row check
 ``json.dumps``), so a value that does not fit raises at the call.
 
 The text is written by type. ``from_json`` reads a ``timestamp_ntz`` only
-as wall-clock ISO text with no offset and a ``binary`` only as base64, so
-a value whose type holds either is rewritten into that text first. The
-parsed (cached) type says whether it does; values of other types (double,
-string and centroid arrays) go to ``json.dumps`` untouched, at no extra
-cost. ``rank``'s per-partition carries (row offsets, sums, lagged values
-of any column type) and ``llmops.similarity``'s projection and hyperplane
-weights enter their plans this way at every size; no size threshold
-switches either to a broadcast join.
+as wall-clock ISO text with no offset, a ``binary`` only as base64 and a
+struct only as a JSON object, so a value whose type holds any of them is
+rewritten first (a struct given as a tuple or ``Row`` becomes a dict by
+field name). The parsed (cached) type says whether it does; values of
+other types (double, string and bigint arrays) go to ``json.dumps``
+untouched, at no extra cost. ``rank``'s per-partition carries (row
+offsets, sums, lagged values of any column type) and
+``llmops.similarity``'s projection and hyperplane weights enter their
+plans this way at every size; no size threshold switches either to a
+broadcast join.
 
 Local frames
 ------------
@@ -101,7 +103,7 @@ import zipimport
 from contextlib import contextmanager
 
 from pyspark import TaskContext
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -194,8 +196,10 @@ def _json_scalar(v):
 def _text_encoder(dtype):
     """A function that rewrites the ``timestamp_ntz`` and ``binary`` values
     inside a value of ``dtype`` as the text ``from_json`` reads for them
-    (wall-clock ISO with no offset; base64), or None when ``dtype`` holds
-    neither and ``json.dumps`` can take the value as it is."""
+    (wall-clock ISO with no offset; base64) and every struct as a dict by
+    field name (``json.dumps`` writes a tuple or ``Row`` as an array, which
+    ``from_json`` rejects), or None when ``dtype`` holds none of these and
+    ``json.dumps`` can take the value as it is."""
     if isinstance(dtype, TimestampNTZType):
         return lambda v: None if v is None else v.replace(tzinfo=None).isoformat()
     if isinstance(dtype, BinaryType):
@@ -207,12 +211,19 @@ def _text_encoder(dtype):
         enc = _text_encoder(dtype.valueType)
         return enc and (lambda v: None if v is None else {k: enc(x) for k, x in v.items()})
     if isinstance(dtype, StructType):
+        names = dtype.names
         encs = {f.name: _text_encoder(f.dataType) for f in dtype.fields}
-        if not any(encs.values()):
-            return None
-        return lambda v: None if v is None else {
-            k: encs[k](x) if encs.get(k) else x for k, x in v.items()
-        }
+
+        def by_name(v):
+            if v is None:
+                return None
+            if isinstance(v, Row) and hasattr(v, "__fields__"):
+                v = v.asDict()
+            elif not isinstance(v, dict):
+                v = dict(zip(names, v))  # a tuple or list, by position
+            return {k: encs[k](x) if encs.get(k) else x for k, x in v.items()}
+
+        return by_name
     return None
 
 
@@ -225,8 +236,8 @@ def _literal_check(ddl_type: str):
 
 
 def _plan_literal(value, ddl_type: str) -> Column:
-    """``value`` (a list, a list of dicts for structs, nested lists) as
-    one constant of SQL type ``ddl_type`` (``"array<double>"``,
+    """``value`` (a list, nested lists; a struct as a dict, ``Row`` or
+    tuple) as one constant of SQL type ``ddl_type`` (``"array<double>"``,
     ``"array<struct<cell:bigint,cv:array<double>>>"``), in a fixed number
     of gateway calls whatever its size (see "Plan literals" above).
 

@@ -17,6 +17,7 @@ import sys
 import py4j.clientserver
 import py4j.protocol as proto
 import pytest
+from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 import seafan_spark.session as session
@@ -70,6 +71,16 @@ def test_nested_and_struct_types(spark):
         spark, _plan_literal(table, "array<struct<cell:bigint,cv:array<double>>>")
     )
     assert [r.asDict() for r in got] == table
+    # a struct given as a Row (by field name) or a tuple (by position)
+    ddl = "array<struct<p:struct<a:bigint,b:string>>>"
+    for inner in (Row(a=1, b="x"), (1, "x")):
+        got = _one(spark, _plan_literal([{"p": inner}, {"p": None}], ddl))
+        assert [r.asDict(recursive=True) for r in got] == [
+            {"p": {"a": 1, "b": "x"}}, {"p": None}
+        ]
+    got = _one(spark, _plan_literal([Row(cell=3, cv=[0.5]), (4, [])],
+                                    "array<struct<cell:bigint,cv:array<double>>>"))
+    assert [r.asDict() for r in got] == [{"cell": 3, "cv": [0.5]}, {"cell": 4, "cv": []}]
     assert _one(spark, _plan_literal([2**63 - 1, 2**53 + 1], "array<bigint>")) == [
         2**63 - 1,
         2**53 + 1,

@@ -1,8 +1,9 @@
 """Distributed NN trainer (optim.fit_nn): SoftRMS/CE/RMS convergence,
-gradients, tree merge and scoring."""
+gradients, tree merge, scoring, and where the training loop runs."""
 
 import math
 import random
+import uuid
 
 import numpy as np
 import pytest
@@ -344,3 +345,87 @@ def test_nn_transform_fixed_weights_matches_numpy(spark):
     pred = (h @ w2[:-1] + w2[-1]).ravel()
     for i in range(20):
         assert got[i] == pytest.approx(pred[i], abs=1e-12), i
+
+
+# ---------------------------------------------------------------------------
+# where the loop runs: one task at one shard, one pass per iteration above
+# ---------------------------------------------------------------------------
+
+
+def _fit_jobs(spark, fit):
+    """Spark jobs launched by ``fit()`` (counted through the status
+    tracker) and what it returns."""
+    sc = spark.sparkContext
+    group = uuid.uuid4().hex
+    sc.setJobGroup(group, "fit_nn jobs")
+    try:
+        out = fit()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return sorted(sc.statusTracker().getJobIdsForGroup(group)), out
+
+
+# Recorded from the one-pass-per-iteration loop, which the one-task fit
+# must reproduce bit for bit (same batches, same seeded draws, same sums).
+_PINNED = {
+    "ce": (
+        [0.8414411639311284, 0.7910045860141566, 0.7347160012335949,
+         0.6942609534228262, 0.6664283795227379, 0.6393320822804014],
+        [0.1823462010636454, 0.9573659724832612, 0.030651122084284,
+         -0.9055948529085103, -0.602735113675819, -0.23326223842896354,
+         -0.4726702186839857, -1.1380147134670608, -0.9024845785456639,
+         0.8526335057483504, 0.45045694755776783, -0.08592081051579155,
+         -0.5751636816942765, 0.9483723865185107, 0.7953552162170976,
+         0.21273547070116924, 0.260535933185869],
+    ),
+    "softrms": (
+        [0.5902472517406196, 0.49077327275222765, 0.4245966161954184,
+         0.3575184771534835, 0.2901877921904395, 0.2579025737880177],
+        [-1.0061470275957303, -0.4782694536529214, -0.3298305273247064,
+         1.1698978117921308, -0.6139658423729516, -0.42176528327527685],
+    ),
+}
+
+
+def test_one_shard_fit_runs_a_fixed_number_of_jobs(spark):
+    from seafan_spark.optim import fit_nn
+
+    p = _binary_pipe(spark, n=300, seed=21)
+    ms = parse_modspec(["Input(x1+x2)", "FC(size:1, activation:sigmoid)", "Target(y)"])
+    short, m3 = _fit_jobs(spark, lambda: fit_nn(p, ms, cost="ce", max_iter=3))
+    long, m30 = _fit_jobs(spark, lambda: fit_nn(p, ms, cost="ce", max_iter=30, patience=30))
+    assert len(m3.loss_history) == 3 and len(m30.loss_history) == 30
+    assert len(short) == len(long), (short, long)
+
+    ce = parse_modspec(["Input(x1+x2)", "FC(size:3, activation:relu)", "Dropout(.2)",
+                        "FC(size:1, activation:sigmoid)", "Target(y)"])
+    fits = {
+        "ce": fit_nn(p, ce, cost="ce", max_iter=6, lr=0.1, seed=5, batch_frac=0.7),
+        "softrms": fit_nn(p, ms, cost="softrms", max_iter=6, lr=0.2, seed=3),
+    }
+    for cost, model in fits.items():
+        hist, w = _PINNED[cost]
+        got = np.concatenate([f.ravel() for f in model.fcs])
+        assert np.allclose(model.loss_history, hist, rtol=1e-12, atol=0), cost
+        assert np.allclose(got, w, rtol=1e-12, atol=0), cost
+
+
+def test_multi_shard_fit_runs_one_pass_per_iteration(spark):
+    """Above 25k rows the training frame is spread over ~25k-row shards
+    and each iteration is one gradient pass over all of them."""
+    from seafan_spark.optim import fit_nn
+
+    p = _binary_pipe(spark, n=30_000, seed=4)
+    ms = parse_modspec(["Input(x1+x2)", "FC(size:1, activation:sigmoid)", "Target(y)"])
+    jobs, model = _fit_jobs(spark, lambda: fit_nn(p, ms, cost="ce", max_iter=3))
+    hist = model.loss_history
+    assert len(hist) == 3 and all(math.isfinite(x) for x in hist)
+    tracker = spark.sparkContext.statusTracker()
+    # the last three jobs are the three gradient passes, each on 2 shards
+    for jid in jobs[-3:]:
+        (sid,) = tracker.getJobInfo(jid).stageIds
+        assert tracker.getStageInfo(sid).numTasks == 2, jid
+    small = _binary_pipe(spark, n=300, seed=21)
+    one_shard, _ = _fit_jobs(spark, lambda: fit_nn(small, ms, cost="ce", max_iter=3))
+    assert len(jobs) > len(one_shard)
