@@ -31,7 +31,7 @@ from pyspark.sql import types as T
 
 from seafan_spark.ftypes import FParam, FRole, FType, FTypes
 from seafan_spark.pipeline import Pipeline
-from seafan_spark.session import _local_frame
+from seafan_spark.session import _local_frame, _plan_literal
 
 _MAP_LITERAL_MAX = 10_000
 
@@ -100,17 +100,19 @@ def cat_code_col(ft: FType, col: Column | None = None) -> Column:
         raise EncodeError(f"field {ft.name} has no fitted levels")
     col = col if col is not None else F.col(ft.name)
     levels = ft.fp.levels
-    if len(levels) <= _MAP_LITERAL_MAX:
-        pairs: list[Column] = []
-        for v, code in levels.items():
-            pairs += [F.lit(v), F.lit(code)]
-        lookup = F.element_at(F.create_map(*pairs), col)
-    else:
-        # beyond literal-map size, callers should use join_cat_codes()
+    if len(levels) > _MAP_LITERAL_MAX:
+        # a literal map is searched linearly: above this size the
+        # broadcast join of join_cat_codes is the faster lookup
         raise EncodeError(
             f"field {ft.name}: {len(levels)} levels exceeds literal-map limit; "
             "use join_cat_codes() for high-cardinality dictionaries"
         )
+    # a dictionary is fitted over one column, so one key gives the keys'
+    # type; an empty one (an all-NULL column) is ``void``
+    key_type = T._infer_type(next(iter(levels), None)).simpleString()
+    keys = _plan_literal(list(levels), f"array<{key_type}>")
+    codes = _plan_literal(list(levels.values()), "array<int>")
+    lookup = F.element_at(F.map_from_arrays(keys, codes), col)
     if ft.fp.default is not None:
         lookup = F.coalesce(lookup, F.lit(levels[ft.fp.default]))
     return lookup.cast("int")

@@ -2026,18 +2026,16 @@ def _semantic_assign(
         n_clusters = adaptive_n_clusters(unit.count())
     if centroids == "seeds":
         # the k lowest-id unit vectors are the centres — deterministic, no
-        # training job. The old ~0.3 s penalty for rebuilding the seeds on
-        # the driver measured createDataFrame's Python-RDD path. Collected
-        # into session._local_frame instead, semantic_dedup (sf0.01, 8 x
-        # 64-d seeds, warm local[4], medians of 15 build + collect calls)
-        # took 2.20-2.38 CPU-s, 1.19-1.21 s wall and 7 jobs, against
-        # 2.54-2.56 CPU-s, 1.45-1.70 s and 8 jobs for this checkpoint.
-        cents = (
+        # training job. Collected once into a local frame, they reach
+        # _assign_to_centroids with no second job (an eager localCheckpoint
+        # of the same rows cost one job and ~0.3 CPU-s more per
+        # semantic_dedup call at sf0.01).
+        seeds = (
             unit.orderBy("_id")
             .limit(n_clusters)
             .select(F.col("_id").alias("_cell"), F.col("_v").alias("_cv"))
-            .localCheckpoint(eager=True)
         )
+        cents = _local_frame(df.sparkSession, seeds.collect(), seeds.schema)
     else:
         import numpy as np
         from pyspark.ml.clustering import KMeans

@@ -1,4 +1,4 @@
-"""Model layer: the ModSpec DSL mapped onto Spark MLlib.
+"""Model layer: the ModSpec DSL, fitted and scored on Spark.
 
 Reference: ModSpec parse/validate (modspec.go:62-489), gorgonia NN build/fit
 (nn.go:216-840), predict (nn.go:844-896), AddFitted (diags.go:538-583).
@@ -11,30 +11,20 @@ DSL (one layer per line, matching modspec.go):
     FC(size:2, activation:softmax)
     Target(yoh)
 
-Two fit backends:
+One trainer per spec shape:
 
-- default: the MLlib mapping below (fast, JVM optimizers);
-- ``fit(..., cost='ce'|'rms'|'softrms')``: the exact-architecture
-  distributed trainer (optim.fit_nn) — learned embeddings E(f,k),
-  leakyrelu, dropout, Adam + early stopping + NaN-restart, honoring the
-  reference's CostFns (nn.go:520-573) including SoftRMS.
-
-MLlib mapping (documented approximation — SURVEY §2.10: exact gorgonia
-architecture parity is out of Spark-native scope; the contract is "same
-spec DSL, same data prep, comparable fit quality"):
-
-- softmax head, hidden FCs     -> MultilayerPerceptronClassifier
-                                  (sigmoid hidden activations)
-- softmax head, no hidden      -> LogisticRegression (multinomial/binomial)
-- sigmoid head (size 1)        -> LogisticRegression (binomial)
-- linear head                  -> LinearRegression (hidden layers dropped)
-- Dropout layers               -> ignored at fit time (regularization via
-                                  regParam instead)
-- E(field, k) embeddings       -> one-hot input to the estimator; k recorded
-                                  in FType metadata
-
-Feature assembly is JVM-side: continuous columns + one-hot array columns
-via array_to_vector + VectorAssembler — no Python in the row path.
+- a plain GLM spec, exactly one ``FC`` (the head) and no ``E(f,k)`` or
+  ``Dropout``, fits with MLlib: LinearRegression for a continuous
+  target, LogisticRegression (binomial or multinomial) for a class
+  target. Both reach the exact optimum, and their inputs are assembled
+  JVM-side (continuous columns + one-hot arrays via array_to_vector +
+  VectorAssembler), no Python in the row path;
+- every other spec, and any fit given ``cost``, trains the declared net
+  with optim.fit_nn: learned embeddings E(f,k), hidden activations,
+  dropout, Adam + early stopping + NaN-restart, under the reference's
+  CostFns (nn.go:520-573), SoftRMS included. Without ``cost`` a
+  softmax or sigmoid head trains under 'ce' and a linear head under
+  'rms'; any other head needs an explicit ``cost``.
 """
 
 from __future__ import annotations
@@ -45,12 +35,7 @@ import re
 from dataclasses import dataclass, field, replace
 from typing import Any, Sequence
 
-from pyspark.ml.classification import (
-    LogisticRegression,
-    LogisticRegressionModel,
-    MultilayerPerceptronClassificationModel,
-    MultilayerPerceptronClassifier,
-)
+from pyspark.ml.classification import LogisticRegression, LogisticRegressionModel
 from pyspark.ml.feature import VectorAssembler, VectorSizeHint
 from pyspark.ml.functions import array_to_vector, vector_to_array
 from pyspark.ml.regression import LinearRegression, LinearRegressionModel
@@ -232,7 +217,7 @@ def modspec_inputs(ms: ModSpec, pipe: Pipeline) -> FTypes:
 class FitResult:
     model: Any
     modspec: ModSpec
-    kind: str  # 'binomial' | 'multinomial' | 'mlp' | 'linear'
+    kind: str  # 'binomial' | 'multinomial' | 'linear' | 'nn' | 'nn_linear'
     feature_cols: list[str]
     n_classes: int
     fts: FTypes  # training-time encodings for scoring alignment
@@ -288,6 +273,10 @@ def _label_col(pipe: Pipeline, ms: ModSpec) -> tuple[DataFrame, str, int, str]:
     return d, "_label", n_classes, kind
 
 
+# the cost a net trains under when fit() is given none
+_HEAD_COST = {"softmax": "ce", "sigmoid": "ce", "linear": "rms"}
+
+
 def fit(
     pipe: Pipeline,
     ms: ModSpec,
@@ -298,57 +287,49 @@ def fit(
     cost: str | None = None,
     **nn_opts: Any,
 ) -> FitResult:
-    """Fit the ModSpec on the pipeline (Fit.Do, nn.go:598-840 — epochs/
-    Adam/early-stopping replaced by the MLlib optimizer's maxIter/tol;
-    L2 via reg_param).
+    """Fit the ModSpec on the pipeline (Fit.Do, nn.go:598-840).
 
-    ``cost`` in {'ce','rms','softrms'} routes to the exact-architecture
-    trainer (optim.fit_nn): learned embeddings, leakyrelu, dropout, Adam
-    with patience + NaN-restart — the reference's CostFns (nn.go:520-573)
-    honored exactly instead of the MLlib approximation."""
-    d_lab, label, n_classes, kind = _label_col(pipe, ms)
-    if cost is not None:
+    A plain GLM spec (one ``FC``, no ``E(f,k)``, no ``Dropout``) without
+    ``cost`` fits with MLlib's LinearRegression or LogisticRegression
+    (``max_iter``, ``tol``; L2 via ``reg_param``). Every other spec, or
+    any spec given ``cost`` in {'ce','rms','softrms'}, trains the
+    declared net with optim.fit_nn (``max_iter``, ``tol``, ``seed`` and
+    ``nn_opts``); without ``cost`` a softmax or sigmoid head trains
+    under 'ce' and a linear head under 'rms'."""
+    if cost is not None or len(ms.layers) > 1 or any(f.emb_cols for f in ms.inputs):
         from seafan_spark.optim import fit_nn
 
-        nn = fit_nn(
-            pipe, ms, cost=cost, max_iter=max_iter, tol=tol, seed=seed, **nn_opts
-        )
+        if cost is None:
+            act = ms.fcs()[-1].activation
+            if act not in _HEAD_COST:
+                raise ModSpecError(f"a {act} head has no default cost: pass cost=")
+            cost = _HEAD_COST[act]
+        nn = fit_nn(pipe, ms, cost=cost, max_iter=max_iter, tol=tol, seed=seed, **nn_opts)
+        classifies = nn.head == "softmax"
         return FitResult(
             model=nn,
             modspec=ms,
-            kind="nn" if kind == "classification" else "nn_linear",
+            kind="nn" if classifies else "nn_linear",
             feature_cols=[f.name for f in ms.inputs],
-            n_classes=n_classes,
+            n_classes=nn.n_classes if classifies else 0,
             fts=pipe.fts.copy(),
         )
-    lab_pipe = pipe._derive(d_lab)
-    d, in_names, n_feat = _assemble(lab_pipe, ms)
-    fcs = ms.fcs()
-    hidden = [l.size for l in fcs[:-1]]
-    head = fcs[-1]
-
+    d_lab, label, n_classes, kind = _label_col(pipe, ms)
+    d, in_names, _ = _assemble(pipe._derive(d_lab), ms)
     if kind == "regression":
         est = LinearRegression(
             featuresCol="_features", labelCol=label, maxIter=max_iter,
             regParam=reg_param, tol=tol,
         )
         mkind = "linear"
-    elif hidden and head.activation == "softmax":
-        est = MultilayerPerceptronClassifier(
-            featuresCol="_features", labelCol=label, seed=seed,
-            maxIter=max_iter, tol=tol, layers=[n_feat] + hidden + [max(n_classes, 2)],
-        )
-        mkind = "mlp"
     else:
+        mkind = "multinomial" if n_classes > 2 else "binomial"
         est = LogisticRegression(
             featuresCol="_features", labelCol=label, maxIter=max_iter,
-            regParam=reg_param, tol=tol,
-            family="multinomial" if n_classes > 2 else "binomial",
+            regParam=reg_param, tol=tol, family=mkind,
         )
-        mkind = "multinomial" if n_classes > 2 else "binomial"
-    model = est.fit(d)
     return FitResult(
-        model=model,
+        model=est.fit(d),
         modspec=ms,
         kind=mkind,
         feature_cols=in_names,
@@ -422,7 +403,13 @@ def predict(fr: FitResult, pipe: Pipeline, name: str = "fitted") -> Pipeline:
     - ``{name}``      probability of class 1 (binary), prediction otherwise
     - ``{name}_probs`` full probability array (classification)
     """
-    d, _, _ = _assemble(pipe, fr.modspec)
+    if fr.kind.startswith("nn"):
+        # NNModel.transform reads the raw input columns: check they are
+        # there, assemble nothing
+        modspec_inputs(fr.modspec, pipe)
+        d = pipe.df
+    else:
+        d, _, _ = _assemble(pipe, fr.modspec)
     scored = fr.model.transform(d)
     # drop only the helper columns _assemble/transform ADDED - pipeline
     # internals (_rid, append segments, shuffle keys) must survive, the
@@ -495,7 +482,6 @@ _LOADERS = {
     "linear": LinearRegressionModel,
     "binomial": LogisticRegressionModel,
     "multinomial": LogisticRegressionModel,
-    "mlp": MultilayerPerceptronClassificationModel,
 }
 
 

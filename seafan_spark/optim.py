@@ -7,7 +7,8 @@ summed over classes 1..C-1 (class 0 is the omitted base):
 
     L = sum_{i>=1} sqrt( (1/N) * sum_j (p_ji - y_ji)^2 )
 
-``fit_nn`` is the one trainer (``model.fit(..., cost=...)`` routes here);
+``fit_nn`` is the one trainer of a net (``model.fit`` routes every spec
+but a plain GLM here, and any spec given ``cost``);
 see the "Full NN parity" section below for the Spark-first layout.
 """
 
@@ -585,9 +586,9 @@ def fit_nn(
         raise ModSpecError(f"fit_nn: unknown cost {cost!r}")
     d_lab, label, n_classes, kind = _label_col(pipe, ms)
     if cost in ("ce", "softrms") and kind != "classification":
-        raise ModSpecError(f"fit_nn: cost {cost!r} needs a classification head")
+        raise ModSpecError(f"fit_nn: cost {cost!r} needs a classification target")
     if cost == "rms" and kind != "regression":
-        raise ModSpecError("fit_nn: cost 'rms' needs a linear head")
+        raise ModSpecError("fit_nn: cost 'rms' needs a continuous target")
 
     fts = modspec_inputs(ms, pipe)
     blocks: list[_Block] = []

@@ -49,6 +49,20 @@ def test_ks_requires_both_classes(spark):
         ks(p, "fit", "obs")
 
 
+def test_ks_drops_rows_with_a_null_outcome(spark, scored):
+    """A NULL outcome is neither class: ks drops its row, as ks_by does,
+    instead of counting it as a negative."""
+    from seafan_spark.diags import ks_by
+
+    pipe, fit, obs = scored
+    with_nulls = vec_to_pipe(spark, {"fit": fit + [0.95] * 300, "obs": obs + [None] * 300})
+    got = ks(with_nulls, "fit", "obs")
+    assert got == ks(pipe, "fit", "obs")
+    (row,) = ks_by(with_nulls, "fit", "obs").collect()
+    assert row["n_pos"] + row["n_neg"] == len(obs)
+    assert got == pytest.approx(row["ks"], abs=1e-6)
+
+
 def test_decile_table(scored):
     pipe, fit, obs = scored
     rows = decile_table(pipe, "fit", "obs").collect()

@@ -1,5 +1,7 @@
 """Encoding semantics from gdata_test.go:101-174 (FIXTURES.md §3)."""
 
+import datetime
+
 import pytest
 
 from seafan_spark.encode import (
@@ -64,6 +66,46 @@ def test_cat_supplied_dict_default(spark):
     p = append_cat(p, "F", fp=fp, materialize_code=True)
     codes = [r[0] for r in p.ordered_df().select("F__code").collect()]
     assert codes == [2, 3, 4]
+
+
+_D = datetime.date
+_T = datetime.datetime
+
+
+@pytest.mark.parametrize(
+    "ddl, vals",
+    [
+        ("string", ["b", None, "a", "c", "zz"]),
+        ("int", [3, None, 1, 2, 7]),
+        ("bigint", [3, None, 1, 2, 7]),  # int-sized keys on a bigint column
+        ("bigint", [2**40, None, 1, 2, 7]),
+        ("boolean", [True, None, True, False]),
+        ("date", [_D(2020, 1, 3), None, _D(2020, 1, 1), _D(2021, 5, 6)]),
+        ("timestamp", [_T(2020, 1, 3, 4, 5), None, _T(2020, 1, 1), _T(2021, 5, 6)]),
+        ("int", [None, None, 5]),  # an all-NULL column fits no level
+    ],
+)
+def test_cat_code_lookup_is_one_folded_literal(spark, ddl, vals):
+    """The level -> code lookup is one map literal after optimization and
+    gives the codes of a per-level ``create_map`` of ``F.lit`` pairs; a
+    NULL (second value) and an unseen value (last) get no code."""
+    from pyspark.sql import functions as F
+
+    from seafan_spark.ftypes import FType
+
+    df = spark.createDataFrame([(v,) for v in vals], f"v {ddl}")
+    ft = FType(name="v", role=FRole.CAT)
+    ft.fp = FParam(levels={v: i for i, v in enumerate(sorted(set(vals[:-1]) - {None}))})
+    pairs = []
+    for v, code in ft.fp.levels.items():
+        pairs += [F.lit(v), F.lit(code)]
+    want = F.element_at(F.create_map(*pairs), F.col("v")).cast("int")
+    out = df.select(cat_code_col(ft).alias("got"), want.alias("want"))
+    rows = out.collect()
+    assert [r["got"] for r in rows] == [r["want"] for r in rows]
+    assert rows[1]["got"] is None and rows[-1]["got"] is None
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert "from_json" not in plan and "map_from_arrays" not in plan, plan
 
 
 def test_cat_float_rejected(spark):

@@ -216,7 +216,8 @@ def _callee(node):
 
 
 def _per_element_constant(node) -> bool:
-    """``F.array(*[F.lit(...) for ...])`` or ``x.isin(*name)``."""
+    """``F.array(*[F.lit(...) for ...])``, ``x.isin(*name)`` or
+    ``F.create_map(*name)``."""
     if not isinstance(node, ast.Call):
         return False
     starred = [a.value for a in node.args if isinstance(a, ast.Starred)]
@@ -228,7 +229,7 @@ def _per_element_constant(node) -> bool:
             and _callee(s.elt.func) == "lit"
             for s in starred
         )
-    if name == "isin" and isinstance(node.func, ast.Attribute):
+    if name == "create_map" or (name == "isin" and isinstance(node.func, ast.Attribute)):
         return any(isinstance(s, ast.Name) for s in starred)
     return False
 
@@ -251,8 +252,12 @@ def test_guard_rejects_a_planted_site(tmp_path, monkeypatch):
         "    a = F.array(*[F.lit(float(x)) for x in xs])\n"
         "    b = col.isin(*words)\n"
         "    ok = F.array(*[(col == F.lit(i)).cast('double') for i in xs])\n"
-        "    return a, b, ok\n"
+        "    c = F.create_map(*words)\n"
+        "    return a, b, ok, c\n"
     )
     monkeypatch.setattr(sys.modules[__name__], "PKG", pkg)
-    with pytest.raises(AssertionError, match=r"\['seafan_spark/bad.py:3', 'seafan_spark/bad.py:4'\]"):
+    with pytest.raises(
+        AssertionError,
+        match=r"\['seafan_spark/bad.py:3', 'seafan_spark/bad.py:4', 'seafan_spark/bad.py:6'\]",
+    ):
         test_no_constant_list_is_built_one_lit_at_a_time()

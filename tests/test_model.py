@@ -179,14 +179,95 @@ def test_multiclass_and_mlp(spark):
     acc = scored.df.selectExpr(
         "avg(cast(fitted = cast(g = 'hi' as int) + 2*cast(g='lo' as int) as double)) as a"
     )
-    # mlp path
+    # a hidden layer: the declared net, trained by optim.fit_nn
     ms2 = parse_modspec(
         ["Input(x)", "FC(size:4, activation:relu)", "FC(size:3, activation:softmax)", "Target(goh)"]
     )
     fr2 = fit(p, ms2, max_iter=40)
-    assert fr2.kind == "mlp"
+    assert fr2.kind == "nn"
     s2 = predict(fr2, p)
     assert "fitted_probs" in s2.df.columns
+
+
+@pytest.fixture(scope="module")
+def net_data(spark):
+    rnd = random.Random(13)
+    x, g, y, ycts = [], [], [], []
+    for _ in range(300):
+        v, c = rnd.random(), rnd.choice("abc")
+        x.append(v)
+        g.append(c)
+        y.append(1.0 if v + 0.3 * (c == "a") + rnd.gauss(0, 0.2) > 0.6 else 0.0)
+        ycts.append(2.0 * v - 1.0 * (c == "b") + rnd.gauss(0, 0.1))
+    p = vec_to_pipe(spark, {"x": x, "g": g, "y": y, "ycts": ycts})
+    return make_one_hot(append_cat(p, "g"), "g", "goh")
+
+
+_NETS = {
+    "hidden+sigmoid": (["Input(x)", "FC(size:4, activation:relu)",
+                        "FC(size:1, activation:sigmoid)", "Target(y)"], "nn"),
+    "hidden+linear": (["Input(x)", "FC(size:4, activation:relu)",
+                       "FC(size:1, activation:linear)", "Target(ycts)"], "nn_linear"),
+    "embedding": (["Input(x+E(goh,2))", "FC(size:1, activation:sigmoid)", "Target(y)"], "nn"),
+}
+
+
+@pytest.mark.parametrize("name", list(_NETS))
+def test_a_net_without_cost_trains_the_declared_net(net_data, name):
+    """Every spec but a plain GLM trains with optim.fit_nn, whose cost
+    follows the head: a hidden layer is not dropped and an embedding is
+    learned, not fed to a GLM as one-hot columns."""
+    from seafan_spark.optim import NNModel
+
+    spec, kind = _NETS[name]
+    fr = fit(net_data, parse_modspec(spec), max_iter=10)
+    assert fr.kind == kind
+    assert isinstance(fr.model, NNModel) and len(fr.model.loss_history) > 0
+    assert len(fr.model.fcs) == len(parse_modspec(spec).fcs())
+    assert bool(fr.model.emb) == (name == "embedding")
+
+
+@pytest.mark.parametrize(
+    "head, target",
+    [("relu", "ycts"), ("linear", "goh"), ("softmax", "ycts")],
+)
+def test_a_net_whose_head_fits_no_default_cost_fails_loudly(net_data, head, target):
+    """Without cost, a head that has no default cost, or whose cost does
+    not suit the target, raises instead of training another net."""
+    ms = parse_modspec(["Input(x)", "FC(size:4, activation:relu)",
+                        f"FC(size:2, activation:{head})", f"Target({target})"])
+    with pytest.raises(ModSpecError):
+        fit(net_data, ms, max_iter=2)
+
+
+def test_a_net_fitted_without_cost_survives_save_and_load(net_data, tmp_path):
+    spec, _ = _NETS["hidden+sigmoid"]
+    fr = fit(net_data, parse_modspec(spec), max_iter=10)
+    save_model(fr, str(tmp_path / "net"))
+    fr2 = load_model(str(tmp_path / "net"))
+    assert (fr2.kind, fr2.n_classes) == (fr.kind, fr.n_classes)
+    a = predict(fr, net_data).df.select("fitted").collect()
+    b = predict(fr2, net_data).df.select("fitted").collect()
+    assert [r[0] for r in a] == pytest.approx([r[0] for r in b], rel=1e-12)
+
+
+def test_predict_of_a_net_assembles_no_features(net_data, monkeypatch):
+    """NNModel.transform reads the raw input columns: predict builds no
+    MLlib feature vector for it, and still rejects a missing input."""
+    import seafan_spark.model as model
+
+    spec, _ = _NETS["embedding"]
+    fr = fit(net_data, parse_modspec(spec), max_iter=5)
+
+    def no_assembly(*a, **k):
+        raise AssertionError("_assemble called for an NN fit")
+
+    monkeypatch.setattr(model, "_assemble", no_assembly)
+    scored = predict(fr, net_data)
+    assert "fitted_probs" in scored.df.columns
+    assert all(0.0 <= r[0] <= 1.0 for r in scored.df.select("fitted").collect())
+    with pytest.raises(ModSpecError):
+        predict(fr, net_data.drop("goh"))
 
 
 def test_save_load_roundtrip(glm_data, tmp_path):
